@@ -16,12 +16,12 @@ import org.apache.spark.sql.SparkSession
   * lost its head to that window; by r13/r14 even the short-id 3-decimal
   * full-envelope line (~2.1 KB for 175 entries) overflowed it again and
   * the driver's parse was null two rounds running. The stdout line is
-  * therefore MINIMAL: short ids (the prefix before the first underscore,
-  * unique across the suite) at 2-decimal precision in a
-  * total/queries/sf/errors envelope — 1899 chars for 175 entries, inside
-  * the window with the sbt "[success]" trailer after it. Regression
-  * gating never reads the stdout line: the full-name 3-decimal line goes
-  * to target/bench_local.json for committed local snapshots, and
+  * therefore compact ([[stdoutLine]]): the metric/value/unit envelope the
+  * parser anchors on, short ids (the prefix before the first underscore,
+  * unique across the suite) at 2-decimal precision without trailing
+  * zeros, and at most [[StdoutBudget]] chars. Regression gating never
+  * reads the stdout line: the full-name 3-decimal line goes to
+  * target/bench_local.json for committed local snapshots, and
   * scripts/bench_regress.py canonicalizes key shapes before comparing
   * rounds.
   */
@@ -31,6 +31,55 @@ object Bench {
     * "q17b"). Every SparkEntry name starts with a unique such prefix.
     */
   def shortId(name: String): String = name.takeWhile(_ != '_')
+
+  /** Only a ~2000-char tail of stdout is kept for parsing, and sbt's
+    * "[success] Total time ..." line (~75 chars) lands after ours.
+    */
+  val StdoutBudget = 1925
+
+  /** Entry name → seconds, or the error that replaced the timing. */
+  type Results = Seq[(String, Either[String, Double])]
+
+  private def fmt(v: Double, dec: Int): String =
+    s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** `fmt` without trailing zeros ("1.50" → "1.5", "2.00" → "2"). */
+  private def compact(v: Double, dec: Int): String =
+    fmt(v, dec).replaceAll("\\.?0+$", "")
+
+  private def queriesJson(results: Results, num: Double => String,
+                          key: String => String): String =
+    results.map {
+      case (k, Right(v)) => "\"" + key(k) + "\":" + num(v)
+      case (k, Left(_))  => "\"" + key(k) + "\":\"err\""
+    }.mkString("{", ",", "}")
+
+  private def envelope(total: String, queries: Option[String], sf: String,
+                       errors: Int): String =
+    s"""{"metric":"total","value":$total,"unit":"sec"""" +
+      queries.fold("")(q => s""","queries":$q""") +
+      s""","sf":"$sf"""" + (if (errors == 0) "" else s""","errors":$errors""") + "}"
+
+  /** Full-name, 3-decimal line for target/bench_local.json (the shape
+    * bench_regress.py compares across rounds).
+    */
+  def fileLine(results: Results, sf: String): String =
+    envelope(fmt(total(results), 3), Some(queriesJson(results, fmt(_, 3), identity)),
+      sf, results.count(_._2.isLeft))
+
+  /** The stdout line: short ids at 2 decimals without trailing zeros.
+    * Over [[StdoutBudget]] it keeps the envelope and drops `queries` —
+    * the per-entry numbers are in [[fileLine]] either way.
+    */
+  def stdoutLine(results: Results, sf: String): String = {
+    val errors = results.count(_._2.isLeft)
+    val t = compact(total(results), 3)
+    val full = envelope(t, Some(queriesJson(results, compact(_, 2), shortId)), sf, errors)
+    if (full.length <= StdoutBudget) full else envelope(t, None, sf, errors)
+  }
+
+  private def total(results: Results): Double =
+    results.collect { case (_, Right(v)) => v }.sum
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -96,7 +145,7 @@ object Bench {
     // the old swallow-and-time recorded 0.05 s "timings" a regression
     // gate would read as a 10x speedup. Errors make the run red (exit 1)
     // and bench_regress.py treats a present→err entry as fatal.
-    val results: Seq[(String, Either[String, Double])] =
+    val results: Results =
       ordered.map { case (name, fn) =>
         val t0 = System.nanoTime()
         val r = try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
@@ -109,37 +158,15 @@ object Bench {
         name -> r
       }
     val errors = results.collect { case (n, Left(m)) => n -> m }
-    def fmt(v: Double, dec: Int): String =
-      s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
-    def qsJson(dec: Int, key: String => String): String = results.map {
-      case (k, Right(v)) => "\"" + key(k) + "\":" + fmt(v, dec)
-      case (k, Left(_))  => "\"" + key(k) + "\":\"err\""
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, Right(v)) => v }.sum
     val sf = sfDir.split('/').last
-    val errField = if (errors.isEmpty) "" else s""","errors":${errors.size}"""
-    // committed-snapshot twin: full names, 3 decimals, full envelope —
-    // unchanged shape so bench_regress.py keeps comparing across rounds
-    val fileLine =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${qsJson(3, identity)},"sf":"$sf"$errField}"""
-    // stdout line: the driver preserves only a ~2000-char tail of stdout
-    // and sbt's "[success] Total time ..." line (~75 chars) lands after
-    // us, so the budget is ~1925 chars. The r13/r14 full-envelope
-    // 3-decimal line (~2.1-2.2 KB for 175 entries) overflowed it and the
-    // driver's parse came back null BOTH rounds (PERF_r14 empty). Short
-    // ids at 2 decimals in a minimal envelope (total/queries/sf/errors;
-    // measured 1899 chars for 175 entries) fits with slack. The full-
-    // precision numbers are NOT lost — they are the fileLine above.
-    val stdoutLine =
-      s"""{"total":${fmt(total, 3)},"queries":${qsJson(2, shortId)},"sf":"$sf"$errField}"""
     // stop Spark BEFORE printing so no shutdown logging lands after the
     // JSON line and pushes its head out of the driver's tail window
     spark.stop()
     val out = new java.io.File("target/bench_local.json")
     out.getParentFile.mkdirs()
     val w = new java.io.PrintWriter(out)
-    try w.println(fileLine) finally w.close()
-    println(stdoutLine)
+    try w.println(fileLine(results, sf)) finally w.close()
+    println(stdoutLine(results, sf))
     if (errors.nonEmpty) {
       System.err.println(s"[bench] ${errors.size}/${results.size} entries FAILED: " +
         errors.map(_._1).mkString(", "))

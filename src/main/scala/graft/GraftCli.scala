@@ -64,8 +64,9 @@ object GraftCli {
     seeds.foreach { case (n, df) => df.createOrReplaceTempView(n) }
 
     // register only the source tables the project's DAG + tests actually
-    // reference — registration costs a file listing + footer read per
-    // table, pure waste for sources a 2-model project never touches
+    // reference — registration schedules no job but still costs a file
+    // listing + one driver-side footer read per table, pure waste for
+    // sources a 2-model project never touches
     dataDir.foreach { d =>
       val referenced = (allModels.map(_.query) ++
           tests.map(t => s"SELECT (${t.condition})"))

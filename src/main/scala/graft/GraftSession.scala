@@ -74,7 +74,8 @@ object GraftSession {
   * start here rather than from a cached/materialized copy.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame =
+    graft.sources.Sources.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -112,10 +113,11 @@ final case class Tables(spark: SparkSession, dir: String) {
   def documents: DataFrame = t("documents")
   def embeddings: DataFrame = t("embeddings")
 
-  /** Register a subset of tables as temp views. Registration reads each
-    * table's parquet footers for the schema — at 100 TB that is a file
-    * listing per table — so callers that know their reference set (the
-    * model engine does, from the parsed DAG) should register only that.
+  /** Register a subset of tables as temp views. Registration schedules
+    * no job, but it still lists each table's files and reads one footer
+    * on the driver — at 100 TB a listing per table — so callers that know
+    * their reference set (the model engine does, from the parsed DAG)
+    * should register only that.
     */
   def register(names: Iterable[String]): Unit = names.foreach {
     case "events" => events.createOrReplaceTempView("events")

@@ -42,7 +42,7 @@ object ScaleGen {
     // generated copy is directly readable everywhere
     def read(t: String) =
       if (t == "events") Tables(spark, src).events
-      else spark.read.parquet(s"$src/$t.parquet")
+      else graft.sources.Sources.parquet(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$out/$t.parquet")
 

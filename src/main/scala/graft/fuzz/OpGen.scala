@@ -2,6 +2,7 @@ package graft.fuzz
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Operator-family differential fuzzing (VERDICT r9 item 6): QueryGen
   * samples the SQL surface, but the dedup/text/packing operators take
@@ -469,8 +470,8 @@ object OpGen {
     d.edges.map(x => (x.src, x.dst)).toDF("src", "dst")
       .write.mode("overwrite").parquet(s"$dir/edges.parquet")
     Registered(
-      spark.read.parquet(s"$dir/documents.parquet"),
-      spark.read.parquet(s"$dir/embeddings.parquet"),
-      spark.read.parquet(s"$dir/edges.parquet"))
+      Sources.parquet(spark, s"$dir/documents.parquet"),
+      Sources.parquet(spark, s"$dir/embeddings.parquet"),
+      Sources.parquet(spark, s"$dir/edges.parquet"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith
 import org.apache.spark.sql.types.{BooleanType, StructType}
+import graft.sources.Sources
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -292,7 +293,7 @@ final class ModelEngine(spark: SparkSession) {
           .withColumn("is_current", lit(true))
           .select(outCols: _*)
       else {
-        val existing = spark.read.parquet(path)
+        val existing = Sources.parquet(spark, path)
         val open = existing.filter(col("is_current"))
         val closedHist = existing.filter(!col("is_current"))
         // keys whose payload differs from the open version, null-safely
@@ -441,7 +442,7 @@ final class ModelEngine(spark: SparkSession) {
       byName(name) match {
         case TableModel(n, _) =>
           if (ModelEngine.warehouseTableExists(spark, warehouse, n))
-            spark.read.parquet(s"$warehouse/$n").createOrReplaceTempView(n)
+            Sources.parquet(spark, s"$warehouse/$n").createOrReplaceTempView(n)
         case ViewModel(n, q) =>
           spark.sql(q).createOrReplaceTempView(n)
       }
@@ -497,8 +498,8 @@ final class ModelEngine(spark: SparkSession) {
             .createOrReplaceTempView(n)
         } else {
           status += n -> "skipped"
-          // schema unknown without reading (built by an earlier run)
-          spark.read.parquet(path).createOrReplaceTempView(n)
+          // built by an earlier run: schema from its footer, no job
+          Sources.parquet(spark, path).createOrReplaceTempView(n)
         }
     }
 

@@ -87,7 +87,7 @@ object Snapshots {
   def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(currentVersion(table)).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    spark.read.parquet(s"$table/v=$v")
+    Sources.parquet(spark, s"$table/v=$v")
   }
 
   /** Change-data-feed between two committed versions: every row of the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface. The reference's "sources" are warehouse tables on
@@ -12,6 +13,9 @@ import org.apache.spark.sql.types.StructType
   *    is a full extra pass over 100 TB);
   *  - parquet everywhere it matters — columnar pruning + predicate
   *    pushdown only exist there;
+  *  - non-merging parquet schema comes from one footer read on the
+  *    driver, never from a job: [[parquet]] is the one whole-dataset
+  *    parquet reader, and only [[parquetEvolved]] reads every footer;
   *  - partitioned layout on low-cardinality query keys so partition
   *    pruning can skip files wholesale;
   *  - bucketing on high-cardinality join keys so repeated joins on that
@@ -19,8 +23,13 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** Whole-dataset parquet read. The schema is the one Spark's
+    * non-merging inference would pick, read from one footer on the
+    * driver ([[FooterSchema]]): a schema-less `spark.read.parquet`
+    * schedules a whole job to read that one footer.
+    */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(FooterSchema.infer(spark, path)).parquet(path)
 
   def csv(spark: SparkSession, path: String, schema: StructType,
           header: Boolean = true, delimiter: String = ","): DataFrame =

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** One streamed document (top-level so state-store codegen can see a
   * public constructor — see the flatMapGroupsWithState gotcha).
@@ -64,7 +65,7 @@ object CorpusStream {
     val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val seen =
       if (fs.exists(idxPath))
-        Some(spark.read.parquet(indexPath)
+        Some(Sources.parquet(spark, indexPath)
           .filter(col("batch") =!= batchId).select("fp"))
       else None
     val fresh = seen.fold(withFp)(idx => withFp.join(idx, Seq("fp"), "left_anti"))
@@ -97,7 +98,7 @@ object CorpusStream {
     // the per-batch survivor counts are 3 rows — materialize them so the
     // scratch index can be deleted NOW instead of accumulating a fresh
     // multi-MB tree under /tmp per bench/verify invocation
-    val counts = spark.read.parquet(index)
+    val counts = Sources.parquet(spark, index)
       .groupBy(col("batch").cast("long").as("batch"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("batch")
@@ -143,7 +144,7 @@ object CorpusStream {
       throw new IllegalArgumentException(s"no committed snapshot at $dimTable"))
     val v: Long =
       if (fs.exists(done)) {
-        val r = spark.read.parquet(partDir).select(min(col("dim_version"))).collect()(0)
+        val r = Sources.parquet(spark, partDir).select(min(col("dim_version"))).collect()(0)
         if (r.isNullAt(0)) current else r.getLong(0) // empty batch pinned nothing
       } else current
     val dimRaw = graft.sources.Snapshots.read(spark, dimTable, Some(v))
@@ -223,7 +224,7 @@ object CorpusStream {
     */
   def hybridSearchIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String, k: Int = 20, topN: Int = 10): DataFrame = {
-    val cand = spark.read.parquet(indexPath)
+    val cand = Sources.parquet(spark, indexPath)
     def side(s: String) = graft.plans.TopKPerGroup.topKPerGroup(
       cand.filter(col("side") === s).select("query_id", "id", "score"),
       Seq("query_id"), Seq(("score", false), ("id", true)), k)

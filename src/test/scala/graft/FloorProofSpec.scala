@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -28,32 +27,6 @@ class FloorProofSpec extends SparkSpec {
 
   private def exchanges(plan: String): Int =
     plan.linesIterator.count(_.trim.matches("\\(\\d+\\) Exchange( .*)?"))
-
-  /** Number of Spark jobs scheduled while `body` runs (listener bus is
-    * async — wait for the counter to go quiescent before reading it).
-    */
-  private def countJobs(body: => Unit): Int = {
-    spark.catalog.clearCache()
-    val acc = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = acc.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val v = acc.get()
-        if (v == prev) stable += 1 else { stable = 0; prev = v }
-      }
-      acc.get()
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.catalog.clearCache()
-    }
-  }
 
   // Pinned values are the MEASURED counts on the current plans (AQE
   // materializes every shuffle query stage as its own scheduler job, so

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +21,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs scheduled while `body` runs, on a cold data
+    * cache (listener bus is async — wait for the counter to go quiescent
+    * before reading it).
+    */
+  protected def countJobs(body: => Unit): Int = {
+    spark.catalog.clearCache()
+    val acc = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = acc.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var prev = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val v = acc.get()
+        if (v == prev) stable += 1 else { stable = 0; prev = v }
+      }
+      acc.get()
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      spark.catalog.clearCache()
+    }
+  }
 
   override def afterAll(): Unit = {
     // keep the session alive for sibling suites; stopped by the JVM exit

@@ -99,6 +99,21 @@ class ModelEngineSpec extends SparkSpec {
     assert(new java.io.File(s"$wh/t1").exists(), "table model must be materialized")
   }
 
+  test("registerWarehouse re-attaches a built DAG without scheduling a job") {
+    Tables(spark, sfDir).registerAll()
+    val wh = java.nio.file.Files.createTempDirectory("graft_spec_reattach_").toString
+    val models = ModelParser.parseModelFile(
+      """CREATE TABLE ra_orders AS SELECT o_custkey, o_totalprice FROM orders;
+        |CREATE VIEW ra_big AS SELECT o_custkey FROM ra_orders WHERE o_totalprice > 100000;
+        |CREATE TABLE ra_counts AS SELECT o_custkey, COUNT(*) AS n FROM ra_big GROUP BY o_custkey""".stripMargin)
+    engine.run(models, wh)
+    val built = models.map(m => m.name -> spark.table(m.name).schema).toMap
+    models.foreach(m => spark.catalog.dropTempView(m.name))
+    val n = countJobs(new ModelEngine(spark).registerWarehouse(models, wh))
+    assert(n == 0, s"registerWarehouse scheduled $n jobs")
+    models.foreach(m => assert(spark.table(m.name).schema == built(m.name), m.name))
+  }
+
   test("test runs asserts and reports pass/fail; failFast stops early") {
     val results = engine.test(Seq(
       AssertTest("1 = 1", "ok test"),

@@ -6,6 +6,86 @@ import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
 
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The one reader must see exactly the schema Spark's own schema-less
+    * read infers — it only moves the footer read from a job to the driver.
+    */
+  private def assertParity(path: String): Unit = {
+    val want = spark.read.parquet(path).schema
+    assert(Sources.parquet(spark, path).schema == want, s"schema differs at $path")
+  }
+
+  test("Sources.parquet infers Spark's schema for every testdata source") {
+    Tables.SourceNames.filter(_ != "events").foreach(n => assertParity(s"$sfDir/$n.parquet"))
+    withConf("spark.sql.legacy.parquet.nanosAsLong", "true") {
+      assertParity(s"$sfDir/events.parquet")
+    }
+  }
+
+  test("Sources.parquet infers Spark's schema for NTZ-written timestamps, with and without NTZ inference") {
+    val dir = tmpDir("parity_ntz_")
+    Tables(spark, sfDir).events
+      .withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampNTZType))
+      .write.parquet(s"$dir/events.parquet")
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    withConf(key, "false")(assertParity(s"$dir/events.parquet"))
+    withConf(key, "true")(assertParity(s"$dir/events.parquet"))
+  }
+
+  test("Sources.parquet infers Spark's schema for warehouse, partitioned and summary-file layouts") {
+    // a Spark-written warehouse table: several part files plus _SUCCESS
+    val wh = s"${tmpDir("parity_wh_")}/t"
+    Tables(spark, sfDir).orders.repartition(3).write.parquet(wh)
+    val names = new java.io.File(wh).list().toSeq
+    assert(names.contains("_SUCCESS") && names.count(_.startsWith("part-")) >= 2)
+    assertParity(wh)
+
+    // a k=v partitioned directory
+    val parted = s"${tmpDir("parity_part_")}/by_status"
+    Sources.writePartitioned(Tables(spark, sfDir).orders, parted, Seq("o_orderstatus"))
+    assertParity(parted)
+
+    // a directory whose _common_metadata disagrees with its data files:
+    // Spark takes the summary file's schema, so parity proves the same pick
+    import spark.implicits._
+    val root = tmpDir("parity_summary_")
+    Seq((1L, "x")).toDF("id", "s").write
+      .option("parquet.summary.metadata.level", "ALL").parquet(s"$root/summary")
+    Seq((2L, "y", 3.5)).toDF("id", "s", "score").write.parquet(s"$root/t")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$root/summary/_common_metadata"),
+      java.nio.file.Paths.get(s"$root/t/_common_metadata"))
+    assert(spark.read.parquet(s"$root/t").columns.toSeq == Seq("id", "s"))
+    assertParity(s"$root/t")
+  }
+
+  test("Sources.parquet fails on a missing or empty path with Spark's own error") {
+    def condition(read: String => Any, path: String): String =
+      intercept[org.apache.spark.sql.AnalysisException](read(path)).getCondition
+    val missing = s"${tmpDir("parity_missing_")}/nope"
+    val empty = tmpDir("parity_empty_")
+    for (path <- Seq(missing, empty)) {
+      val want = condition(spark.read.parquet(_), path)
+      assert(want != null && condition(Sources.parquet(spark, _), path) == want)
+    }
+  }
+
+  test("registering 4 sources schedules no Spark job") {
+    // the counter does see a schema-less read's inference job
+    assert(countJobs(spark.read.parquet(s"$sfDir/orders.parquet")) >= 1)
+    val n = countJobs(Tables(spark, sfDir).register(
+      Seq("customer", "part", "orders", "lineitem")))
+    assert(n == 0, s"Tables.register scheduled $n jobs")
+  }
+
   test("csv and jsonl round-trip with explicit schemas") {
     val orders = Tables(spark, sfDir).orders.limit(100)
     val tmp = java.nio.file.Files.createTempDirectory("sources_").toString
