@@ -42,59 +42,6 @@ object Dedup {
     */
   private def dfCap(nDocs: Long): Long = math.max(20L, nDocs / 250L)
 
-  /** MinHash signature via the native codegen'd expression
-    * (graft.functions.MinHashSignature): one generated-Java pass per row,
-    * k running minima — measured ~10× over the interpreted higher-order
-    * function formulation it replaces.
-    */
-  private def withMinhash(df: DataFrame, k: Int = 64, seed: Long = 42L): DataFrame =
-    df.withColumn("sig", graft.functions.HashExpressions.minhashSig(col("shingles"), k, seed))
-
-  /** Candidate pairs from LSH banding: explode (band, bandKey) rows,
-    * drop oversized buckets (skew guard), self-join within buckets.
-    */
-  private def lshCandidates(
-      sigDf: DataFrame, bands: Int, rowsPerBand: Int, maxBucket: Int): DataFrame = {
-    val bandStructs = array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)).as("bkey"))
-    }: _*)
-    // The exploded band table feeds four plan branches (bucket counts,
-    // the semi join, and both self-join sides): persist it instead of
-    // recomputing scan→shingles→signature per branch. It is 3 small
-    // columns per row — linear, spill-safe (MEMORY_AND_DISK) — the same
-    // materialize-the-signatures step a 100 TB dedup run would
-    // checkpoint before the bucket join.
-    val exploded = sigDf
-      .select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .persistTracked
-    val buckets = exploded.groupBy("band", "bkey").count()
-      .filter(col("count").between(2, maxBucket))
-      .select("band", "bkey")
-    val members = exploded.join(buckets, Seq("band", "bkey"), "left_semi")
-    members.as("l")
-      .join(members.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-  }
-
-  /** Exact shingle-Jaccard verification of candidate pairs. */
-  private def withJaccard(pairs: DataFrame, shingled: DataFrame): DataFrame = {
-    // joined twice (id_a side and id_b side) → persist one computation
-    val sh = shingled.select(col("doc_id"), col("shingles"))
-      .persistTracked
-    pairs
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "id_a", "shingles" -> "sh_a")), Seq("id_a"))
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "id_b", "shingles" -> "sh_b")), Seq("id_b"))
-      .withColumn("jaccard", round(
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))), 4))
-      .select("id_a", "id_b", "jaccard")
-  }
-
   /** d1_dedup_exact — exact duplicate grouping. Grouping key is the text
     * itself for oracle parity; at 100 TB you'd group by xxhash64(text)
     * first and confirm within hash groups so the shuffle carries 8-byte
@@ -130,6 +77,93 @@ object Dedup {
     */
   private val CALIB_NEIGHBORS = 8
 
+  /** The dedup family's one candidate-pair kernel: a bucket self-join over
+    * `keyed` = (doc_id, key columns…), every distinct `keys` value one
+    * bucket. Buckets outside [2, maxBucket] members are dropped first by
+    * a key-only count + left-semi join (the skew guard). Within a
+    * surviving bucket, `successors = 0` pairs every member with every
+    * later one (C(s,2) pairs for s members); `successors = W` ranks
+    * members by doc_id and pairs each with its next W only (≤ s·W pairs,
+    * [[CALIB_NEIGHBORS]]). Output is distinct (id_a, id_b) with
+    * id_a < id_b: a pair sharing several buckets comes out once.
+    * Outside it on purpose: d3 (scores hamming inside the join, so it
+    * carries a payload column), d5/d10/s15 (window-count or left-join
+    * guards, measured at their sites) and t27 (train×eval broadcast
+    * join, not a self-join).
+    *
+    * Persists nothing. `keyed` feeds four plan branches (bucket counts,
+    * the semi join, and both self-join sides), so a caller whose keyed
+    * frame is expensive persists it rather than recomputing
+    * scan→shingles→signature per branch. A band table is 3 small columns
+    * per row — linear, spill-safe (MEMORY_AND_DISK) — the same
+    * materialize-the-signatures step a 100 TB dedup run would checkpoint
+    * before the bucket join.
+    */
+  private[ops] def bucketPairs(
+      keyed: DataFrame, keys: Seq[String], maxBucket: Long, successors: Int): DataFrame = {
+    val buckets = keyed.groupBy(keys.head, keys.tail: _*).count()
+      .filter(col("count").between(2, maxBucket)).select(keys.head, keys.tail: _*)
+    val members = keyed.join(buckets, keys, "left_semi")
+    val sameBucket = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+    val pairs =
+      if (successors == 0) {
+        members.as("l").join(members.as("r"), sameBucket && col("l.doc_id") < col("r.doc_id"))
+      } else {
+        // deterministic (doc_id order), so the DuckDB oracles mirror the
+        // window row-for-row with the same row_number
+        val rk = org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.head, keys.tail: _*).orderBy("doc_id")
+        val ranked = members.withColumn("rk", row_number().over(rk))
+        ranked.as("l").join(ranked.as("r"), sameBucket &&
+          col("r.rk") > col("l.rk") && col("r.rk") <= col("l.rk") + successors)
+      }
+    pairs.select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b")).distinct()
+  }
+
+  /** d2's oracle-exact band keys: 16 bands × 4 components of a sha
+    * MinHash signature `sig`, each band's components joined into one
+    * string (the oracles' concat_ws key), exploded to (doc_id, band,
+    * bkey) rows.
+    */
+  private def shaBands(sig: DataFrame): DataFrame = {
+    val bandStructs = array((0 until BANDS).map { b =>
+      val key = concat_ws(",",
+        (0 until ROWS_PER_BAND).map(r => element_at(col("sig"), b * ROWS_PER_BAND + r + 1)): _*)
+      struct(lit(b).as("band"), key.as("bkey"))
+    }: _*)
+    sig.select(col("doc_id"), explode(bandStructs).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+  }
+
+  /** Candidate pairs from the df-capped inverted shingle index over `sh`
+    * = (doc_id, shingles): documents sharing at least one shingle whose
+    * document frequency is in [2, cap] (see [[dfCap]]).
+    */
+  private def shinglePairs(sh: DataFrame, cap: Long): DataFrame =
+    bucketPairs(sh.select(col("doc_id"), explode(col("shingles")).as("shingle")),
+      Seq("shingle"), cap, 0)
+
+  /** Attach both sides' shingle sets (`sh` = doc_id, shingles, n) to the
+    * candidate pairs and count the shared shingles as `inter`.
+    */
+  private def withInter(cands: DataFrame, sh: DataFrame): DataFrame =
+    cands
+      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"), col("n").as("n_a")), Seq("id_a"))
+      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"), col("n").as("n_b")), Seq("id_b"))
+      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+
+  /** Exact shingle-Jaccard verify (integer intersection / (|A|+|B|-inter),
+    * rounded once — the oracles' arithmetic): the candidate pairs scoring
+    * ≥ `minJaccard`, best first.
+    */
+  private def jaccardPairs(cands: DataFrame, sh: DataFrame, minJaccard: Double): DataFrame =
+    withInter(cands, sh)
+      .withColumn("jaccard",
+        round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
+      .filter(col("jaccard") >= minJaccard)
+      .select("id_a", "id_b", "jaccard")
+      .orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
+
   /** d2_dedup_minhash — MinHash(64) + LSH(16 bands × 4 rows) near-dup
     * pairs, verified with exact shingle Jaccard ≥ 0.7.
     *
@@ -141,11 +175,11 @@ object Dedup {
     * doc (one shuffle, partial map-side) → band keys → bucket join with
     * the df guard → exact-Jaccard verify.
     *
-    * The production variant swaps the base hash for the native
-    * xxhash64-based MinHashSignature expression
-    * (graft.functions.HashExpressions.minhashSig: one generated-Java
-    * pass, 8-byte hashes, no sha cost) — same operator shape, checked by
-    * HashExpressionsSpec/GraftFunctionsSpec. [oracle]
+    * No entry uses the native xxhash64-based MinHashSignature expression
+    * (SQL `minhash_sig`; one generated-Java pass, 8-byte hashes, no sha
+    * cost, measured ~10× over the interpreted higher-order-function
+    * formulation): its hashes have no DuckDB twin, so it is checked on its
+    * own by HashExpressionsSpec/GraftFunctionsSpec. [oracle]
     */
   def d2_dedup_minhash(spark: SparkSession, dir: String): DataFrame = {
     val sh = withShingles(Tables(spark, dir).documents)
@@ -156,33 +190,7 @@ object Dedup {
     val sig = sh.withColumn("sig",
       graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
       .select("doc_id", "sig")
-    val bandStructs = array((0 until BANDS).map { b =>
-      val key = concat_ws(",",
-        (0 until ROWS_PER_BAND).map(r => element_at(col("sig"), b * ROWS_PER_BAND + r + 1)): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }: _*)
-    val exploded = sig
-      .select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .persistTracked
-    val buckets = exploded.groupBy("band", "bkey").count()
-      .filter(col("count").between(2, 100)).select("band", "bkey")
-    val members = exploded.join(buckets, Seq("band", "bkey"), "left_semi")
-    val cands = members.as("l")
-      .join(members.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    cands
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
-      .filter(col("jaccard") >= 0.7)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
+    jaccardPairs(bucketPairs(shaBands(sig).persistTracked, Seq("band", "bkey"), 100, 0), sh, 0.7)
   }
 
   /** DuckDB mirror of d2 — same sha-based signatures, bands, df guard,
@@ -227,19 +235,6 @@ object Dedup {
        |  FROM cand JOIN sh a ON a.doc_id = id_a JOIN sh b ON b.doc_id = id_b)
        |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.7
        |ORDER BY jaccard DESC, id_a ASC, id_b ASC""".stripMargin
-  }
-
-  /** Production-hash variant of the d2 pipeline: native xxhash64-based
-    * MinHashSignature (codegen; 8-byte base hashes, no sha cost) + the
-    * same LSH banding and verify. Engine-native hash → spec-checked.
-    */
-  def minhashLshPairsNative(spark: SparkSession, dir: String): DataFrame = {
-    val sh = withShingles(Tables(spark, dir).documents)
-    val sig = withMinhash(sh)
-    val cands = lshCandidates(sig, bands = BANDS, rowsPerBand = ROWS_PER_BAND, maxBucket = 100)
-    withJaccard(cands, sh)
-      .filter(col("jaccard") >= 0.7)
-      .orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
   }
 
   private val SIM_BITS = 60 // 15 sha256 hex chars → fits BIGINT in any engine
@@ -352,24 +347,7 @@ object Dedup {
     val sh = withShingles(docs)
       .select(col("doc_id"), col("shingles"), size(col("shingles")).as("n"))
       .persistTracked
-    val inv = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val rare = inv.groupBy("shingle").count()
-      .filter(col("count").between(2, cap)).select("shingle")
-    val posting = inv.join(rare, Seq("shingle"), "left_semi")
-    val cand = posting.as("l")
-      .join(posting.as("r"),
-        col("l.shingle") === col("r.shingle") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    cand
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
-      .filter(col("jaccard") >= 0.5)
-      .select("id_a", "id_b", "jaccard")
-      .orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
+    jaccardPairs(shinglePairs(sh, cap), sh, 0.5)
   }
 
   /** DuckDB mirror of d4: same shingling, df window, and Jaccard
@@ -413,20 +391,7 @@ object Dedup {
     val sh = withShingles(docs)
       .select(col("doc_id"), col("shingles"), size(col("shingles")).as("n"))
       .persistTracked
-    val inv = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val rare = inv.groupBy("shingle").count()
-      .filter(col("count").between(2, cap)).select("shingle")
-    val posting = inv.join(rare, Seq("shingle"), "left_semi")
-    val cand = posting.as("l")
-      .join(posting.as("r"),
-        col("l.shingle") === col("r.shingle") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    val joined = cand
-      .join(sh.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sh.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-    joined.select(explode(array(
+    withInter(shinglePairs(sh, cap), sh).select(explode(array(
         struct(col("id_a").as("src_id"), col("id_b").as("dst_id"),
           round(col("inter").cast("double") / col("n_a"), 4).as("containment")),
         struct(col("id_b").as("src_id"), col("id_a").as("dst_id"),
@@ -484,16 +449,7 @@ object Dedup {
     // sf0.1); persisting pre-explode keeps the cached footprint per-doc
     val sh = withShingles(docs).select(col("doc_id"), col("shingles"))
       .persistTracked
-    val inv = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val rare = inv.groupBy("shingle").count()
-      .filter(col("count").between(2, cap)).select("shingle")
-    val posting = inv.join(rare, Seq("shingle"), "left_semi")
-    val cand = posting.as("l")
-      .join(posting.as("r"),
-        col("l.shingle") === col("r.shingle") && col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-    cand
+    shinglePairs(sh, cap)
       .join(docs.select(col("doc_id").as("id_a"), col("text").as("text_a")), Seq("id_a"))
       .join(docs.select(col("doc_id").as("id_b"), col("text").as("text_b")), Seq("id_b"))
       // |len(a) − len(b)| ≤ distance, so a length gap > 40 can never
@@ -530,26 +486,6 @@ object Dedup {
       |SELECT id_a, id_b, edit_dist FROM v WHERE edit_dist <= 40
       |ORDER BY edit_dist ASC, id_a ASC, id_b ASC""".stripMargin
 
-  /** d6_dedup_clusters — connected components over the verified near-dup
-    * pair graph, by iterative min-label propagation: every document gets
-    * a cluster_id (the smallest doc_id reachable through near-dup edges)
-    * and `keep` marks the cluster representative. This is the step that
-    * turns pairwise similarity into an actual dedup decision.
-    *
-    * The edge list is d4's exact-Jaccard pairs (>= 0.5) — deterministic,
-    * so the whole operator is oracle-checked against a recursive-CTE
-    * transitive closure in DuckDB. Swapping in d2's LSH pairs gives the
-    * identical propagation at 100 TB scale.
-    *
-    * Scale: near-dup components are overwhelmingly tiny cliques
-    * (diameter ≤ a few hops). Each round is one join + groupBy over the
-    * edge list, localCheckpoint'd (eager) to truncate lineage — without
-    * that the plan tree doubles per iteration and analysis itself blows
-    * up (on a cluster prefer reliable checkpoint(dir) so rounds survive
-    * executor loss). Propagation stops as soon as a round changes no
-    * label (the convergence count rides the same job); components wider
-    * than ~12 hops would need large-star/small-star instead. [oracle]
-    */
   /** Result of min-label propagation: per-node labels plus an explicit
     * convergence signal — a caller must be able to TELL that a wide
     * component hit the round cap (and e.g. rerun with more rounds or a
@@ -695,6 +631,28 @@ object Dedup {
     if (lp.converged) lp else clusterLabelsStar(pairs, checkpointDir = checkpointDir)
   }
 
+  /** d6_dedup_clusters — connected components over the verified near-dup
+    * pair graph, by iterative min-label propagation
+    * ([[clusterLabelsAuto]]): every document gets a cluster_id (the
+    * smallest doc_id reachable through near-dup edges) and `keep` marks
+    * the cluster representative. This is the step that turns pairwise
+    * similarity into an actual dedup decision.
+    *
+    * The edge list is d4's exact-Jaccard pairs (>= 0.5) — deterministic,
+    * so the whole operator is oracle-checked against a recursive-CTE
+    * transitive closure in DuckDB. Swapping in d2's LSH pairs gives the
+    * identical propagation at 100 TB scale.
+    *
+    * Scale: near-dup components are overwhelmingly tiny cliques
+    * (diameter ≤ a few hops). Each round is one join + groupBy over the
+    * edge list, localCheckpoint'd (eager) to truncate lineage — without
+    * that the plan tree doubles per iteration and analysis itself blows
+    * up (on a cluster prefer reliable checkpoint(dir) so rounds survive
+    * executor loss). Propagation stops as soon as a round changes no
+    * label (the convergence count rides the same job); a component wider
+    * than 12 hops makes [[clusterLabelsAuto]] escalate to large-star /
+    * small-star contraction. [oracle]
+    */
   def d6_dedup_clusters(spark: SparkSession, dir: String): DataFrame = {
     val result = clusterLabelsAuto(d4_ngram_jaccard(spark, dir).select("id_a", "id_b"))
     require(result.converged,
@@ -984,13 +942,7 @@ object Dedup {
     val sig = sh.withColumn("sig",
       graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
       .select("doc_id", "sig")
-    val bandStructs = array((0 until BANDS).map { b =>
-      val key = concat_ws(",",
-        (0 until ROWS_PER_BAND).map(r => element_at(col("sig"), b * ROWS_PER_BAND + r + 1)): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }: _*)
-    val banded = sig.select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    val banded = shaBands(sig)
     val trainB = banded.filter(col("doc_id") % 100 < 80)
     val evalB = banded.filter(col("doc_id") % 100 >= 90)
       .withColumnRenamed("doc_id", "eval_id")
@@ -1279,23 +1231,6 @@ object Dedup {
        |FROM flagged GROUP BY doc_id
        |ORDER BY doc_id""".stripMargin
 
-  /** Env-gated scale diagnostic (`SPARK_GRAFT_LOG_PAIRS=1`): count and
-    * log a candidate-pair frame before it is consumed, so a sf1-vs-sf10
-    * run can separate "the host is slow" from "the banding collided" —
-    * pairs growing ~10× for 10× data means the algorithm is linear and
-    * any super-linear wall-time is environmental; ~100× means a real
-    * collision blow-up. Off by default: the extra `count()` is a whole
-    * extra job and must not perturb bench timings.
-    */
-  private def logPairCount(tag: String, cands: DataFrame): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_LOG_PAIRS")) {
-      // scalastyle:off println
-      println(s"[graft-pairs] $tag candidate_pairs=${cands.count()}")
-      // scalastyle:on println
-    }
-    cands
-  }
-
   // ---------------------------------------------------------------- d13
 
   /** d13_lsh_calibration — MinHash estimator calibration report over a
@@ -1335,40 +1270,16 @@ object Dedup {
       .withColumn("sig",
         graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
       .persistTracked
-    val sig = info.select("doc_id", "sig")
-    val bandStructs = array((0 until BANDS).map { b =>
-      val key = concat_ws(",",
-        (0 until ROWS_PER_BAND).map(r => element_at(col("sig"), b * ROWS_PER_BAND + r + 1)): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }: _*)
-    val exploded = sig
-      .select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .persistTracked
-    val buckets = exploded.groupBy("band", "bkey").count()
-      .filter(col("count").between(2, 100)).select("band", "bkey")
-    val members = exploded.join(buckets, Seq("band", "bkey"), "left_semi")
-    // Bounded per-bucket pairing: rank members by doc_id inside each
-    // bucket and pair each member only with its next CALIB_NEIGHBORS
-    // successors, so a bucket of size s yields ≤ s·W pairs instead of
-    // C(s,2). Calibration needs a REPRESENTATIVE pair sample per bucket,
-    // not every pair — and C(s,2) is exactly where a corpus whose dup
-    // families grow with its size (r13 measurement: the rotated sf10
-    // corpus carries 100-member bigram-shingle families, 24.3M pairs vs
-    // sf1's 0.32M = 76× for 10× data) turns a linear report quadratic.
-    // The window is deterministic (doc_id order), so the DuckDB oracle
-    // mirrors it row-for-row with the same row_number.
-    val rk = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "bkey").orderBy("doc_id")
-    val ranked = members.withColumn("rk", row_number().over(rk))
-    val cands = logPairCount("d13", ranked.as("l")
-      .join(ranked.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("r.rk") > col("l.rk") &&
-          col("r.rk") <= col("l.rk") + CALIB_NEIGHBORS)
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct())
-    cands
+    // Bounded per-bucket pairing: each member pairs only with its next
+    // CALIB_NEIGHBORS doc_id-ordered successors, so a bucket of size s
+    // yields ≤ s·W pairs instead of C(s,2). Calibration needs a
+    // REPRESENTATIVE pair sample per bucket, not every pair — and C(s,2)
+    // is exactly where a corpus whose dup families grow with its size
+    // (r13 measurement: the rotated sf10 corpus carries 100-member
+    // bigram-shingle families, 24.3M pairs vs sf1's 0.32M = 76× for 10×
+    // data) turns a linear report quadratic.
+    bucketPairs(shaBands(info.select("doc_id", "sig")).persistTracked,
+        Seq("band", "bkey"), 100, CALIB_NEIGHBORS)
       .join(info.select(col("doc_id").as("id_a"), col("sig").as("sig_a"),
         col("shingles").as("sh_a"), col("n").as("n_a")), Seq("id_a"))
       .join(info.select(col("doc_id").as("id_b"), col("sig").as("sig_b"),
@@ -1452,33 +1363,30 @@ object Dedup {
        |FROM scored GROUP BY 1 ORDER BY decile""".stripMargin
   }
 
-  /** d2's oracle-exact banding on sha-based signatures: (band, joined
-    * component string) keys, the 2..100 bucket-size skew guard, within-
-    * bucket ordered pairs. Factored for the entries that reuse the
-    * verified candidate set (d14's policy audit).
-    */
-  private def lshCandidatesSha(sig: DataFrame): DataFrame = {
-    val bandStructs = array((0 until BANDS).map { b =>
-      val key = concat_ws(",",
-        (0 until ROWS_PER_BAND).map(r => element_at(col("sig"), b * ROWS_PER_BAND + r + 1)): _*)
-      struct(lit(b).as("band"), key.as("bkey"))
-    }: _*)
-    val exploded = sig
-      .select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      .persistTracked
-    val buckets = exploded.groupBy("band", "bkey").count()
-      .filter(col("count").between(2, 100)).select("band", "bkey")
-    val members = exploded.join(buckets, Seq("band", "bkey"), "left_semi")
-    members.as("l")
-      .join(members.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id_a"), col("r.doc_id").as("id_b"))
-      .distinct()
-  }
-
   // ---------------------------------------------------------------- d14
+
+  /** d14's doc frame + FULL candidate-pair frame, exposed package-private
+    * so DedupSpec can pin the candidate count against the banding
+    * closed form (r13 verdict item 5): d14 deliberately keeps the
+    * complete pair set — a retention audit that samples pairs changes
+    * answers — so the one regression class its design exposes is a
+    * banding change silently inflating (or windowing) the pair count.
+    * The spec counts THIS frame, the same object d14 consumes.
+    */
+  private[graft] def d14BaseAndCandidates(
+      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = withShingles(Tables(spark, dir).documents)
+      .withColumn("n_toks", size(col("toks")).cast("long"))
+      .withColumn("quality", expr(
+        s"size(filter(toks, x -> x IN (${TextOps.STOPWORDS_SQL}))) * 1000 DIV greatest(n_toks, 1)"))
+      .select(col("doc_id"), col("shingles"), size(col("shingles")).as("n"),
+        col("n_toks"), col("quality"))
+      .persistTracked
+    val sig = base.withColumn("sig",
+      graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
+      .select("doc_id", "sig")
+    (base, bucketPairs(shaBands(sig).persistTracked, Seq("band", "bkey"), 100, 0))
+  }
 
   /** d14_retention_policies — dedup RETENTION-POLICY audit: given the
     * verified near-dup pairs (d2's LSH candidates at exact Jaccard
@@ -1500,29 +1408,6 @@ object Dedup {
     * doc-keyed collapse, and a 3-row aggregate joined against 1-row
     * corpus totals. [oracle]
     */
-  /** d14's doc frame + FULL candidate-pair frame, exposed package-private
-    * so Round9dOpsSpec can pin the candidate count against the banding
-    * closed form (r13 verdict item 5): d14 deliberately keeps the
-    * complete pair set — a retention audit that samples pairs changes
-    * answers — so the one regression class its design exposes is a
-    * banding change silently inflating (or windowing) the pair count.
-    * The spec counts THIS frame, the same object d14 consumes.
-    */
-  private[graft] def d14BaseAndCandidates(
-      spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val base = withShingles(Tables(spark, dir).documents)
-      .withColumn("n_toks", size(col("toks")).cast("long"))
-      .withColumn("quality", expr(
-        s"size(filter(toks, x -> x IN (${TextOps.STOPWORDS_SQL}))) * 1000 DIV greatest(n_toks, 1)"))
-      .select(col("doc_id"), col("shingles"), size(col("shingles")).as("n"),
-        col("n_toks"), col("quality"))
-      .persistTracked
-    val sig = base.withColumn("sig",
-      graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
-      .select("doc_id", "sig")
-    (base, logPairCount("d14", lshCandidatesSha(sig)))
-  }
-
   def d14_retention_policies(spark: SparkSession, dir: String): DataFrame = {
     val (base, cands) = d14BaseAndCandidates(spark, dir)
     val stats = base.select("doc_id", "n_toks", "quality")

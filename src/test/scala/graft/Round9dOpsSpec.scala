@@ -1,13 +1,12 @@
 package graft
 
-import graft.ops.{Dedup, PipelineOps, TextOps}
+import graft.ops.{PipelineOps, TextOps}
 import org.apache.spark.sql.functions._
 
-/** Semantic contracts for the round-9 fourth-wave operators
-  * (t30/d13/p7) beyond their DuckDB-oracle exactness: the Gopher
-  * repetition rules reject constructed loop-spam, the MinHash estimator
-  * is exact on identical docs and bounded on real data, and the packing
-  * manifest conserves token mass.
+/** Semantic contracts for the round-9 fourth-wave operators (t30/p7)
+  * beyond their DuckDB-oracle exactness: the Gopher repetition rules
+  * reject constructed loop-spam and the packing manifest conserves token
+  * mass. d13's contracts live in ops.DedupSpec.
   */
 class Round9dOpsSpec extends SparkSpec {
 
@@ -45,76 +44,6 @@ class Round9dOpsSpec extends SparkSpec {
       assert(top2 >= 0 && top2 <= 2000, "a doc of one repeated token peaks at 2000")
       assert(dup5 >= 0 && dup5 < 5000)
       assert(r.getAs[Boolean]("keep") == (top2 <= 200 && dup5 <= 150))
-    }
-  }
-
-  test("d13: identical docs calibrate exactly — decile 10, zero estimator error") {
-    val dir = tmpDir("graft_d13_")
-    val text = (1 to 30).map(i => s"tok$i").mkString(" ")
-    val other = (100 to 140).map(i => s"oth$i").mkString(" ")
-    writeDocs(dir, Seq(1L -> text, 2L -> text, 3L -> other))
-    val rows = Dedup.d13_lsh_calibration(spark, dir).collect()
-    val ten = rows.find(_.getAs[Long]("decile") == 10L)
-      .getOrElse(fail("identical pair must land in decile 10"))
-    assert(ten.getAs[Long]("n_pairs") == 1L)
-    assert(ten.getAs[Long]("mean_est_pm") == 1000L)
-    assert(ten.getAs[Long]("mean_exact_pm") == 1000L)
-    assert(ten.getAs[Long]("max_abs_err_pm") == 0L)
-  }
-
-  test("d13: the per-bucket window bounds a dup family at s*W pairs, never C(s,2)") {
-    // 30 IDENTICAL docs = one 30-member bucket in every band (same
-    // signature everywhere, size 30 is inside the 2..100 cap). The
-    // CALIB_NEIGHBORS=8 window must admit exactly 30*8 - 8*9/2 = 204
-    // distinct pairs; unwindowed C(30,2) pairing would admit 435. This
-    // is the r13 scale guard in CI form: a corpus whose dup families
-    // grow with its size (PAIRS_r13.json: 76x pairs for 10x data on the
-    // rotated sf10 corpus) must not turn the calibration quadratic.
-    val dir = tmpDir("graft_d13w_")
-    val text = (1 to 40).map(i => s"fam$i").mkString(" ")
-    writeDocs(dir, (1L to 30L).map(_ -> text))
-    val rows = Dedup.d13_lsh_calibration(spark, dir).collect()
-    assert(rows.length == 1, "identical docs land in one decile")
-    assert(rows.head.getAs[Long]("decile") == 10L)
-    assert(rows.head.getAs[Long]("n_pairs") == 204L,
-      s"window must admit s*W - W*(W+1)/2 = 204 pairs, got ${rows.head}")
-    assert(rows.head.getAs[Long]("max_abs_err_pm") == 0L)
-  }
-
-  test("d14: candidate count equals the banding closed form — full C(s,2), never windowed") {
-    // 30 identical docs = one 30-member bucket in every band (inside the
-    // 2..100 cap). d14 KEEPS the complete candidate set by design (a
-    // retention audit that samples pairs changes answers — PAIRS_r13),
-    // so the distinct-pair frame must be exactly C(30,2) = 435. A
-    // banding change that silently inflates pairs, or a d13-style
-    // CALIB_NEIGHBORS window leaking into d14 (which would shrink this
-    // to 30*8 - 8*9/2 = 204), fails here before it changes answers.
-    val dir = tmpDir("graft_d14c_")
-    val text = (1 to 40).map(i => s"fam$i").mkString(" ")
-    writeDocs(dir, (1L to 30L).map(_ -> text))
-    val (_, cands) = Dedup.d14BaseAndCandidates(spark, dir)
-    assert(cands.count() == 435L,
-      "d14's audit must see the FULL banding pair set C(30,2) = 435")
-    // and the audit consumes all of them: under keep_first every doc
-    // that is id_b in SOME pair drops — with full pairing that is 2..30
-    val kf = Dedup.d14_retention_policies(spark, dir).collect()
-      .find(_.getAs[String]("policy") == "keep_first")
-      .getOrElse(fail("keep_first row missing"))
-    assert(kf.getAs[Long]("n_dropped") == 29L && kf.getAs[Long]("n_kept") == 1L)
-  }
-
-  test("d13: report is bounded and decile-consistent on real data") {
-    val rows = Dedup.d13_lsh_calibration(spark, sfDir).collect()
-    assert(rows.nonEmpty, "the sf corpus contains near-dup pairs")
-    rows.foreach { r =>
-      val d = r.getAs[Long]("decile")
-      assert(d >= 0 && d <= 10)
-      val est = r.getAs[Long]("mean_est_pm")
-      val exa = r.getAs[Long]("mean_exact_pm")
-      assert(est >= 0 && est <= 1000 && exa >= 0 && exa <= 1000)
-      assert(exa >= d * 100 && exa < (d + 1) * 100 || d == 10,
-        "the decile's mean must sit inside the decile")
-      assert(r.getAs[Long]("mean_abs_err_pm") <= r.getAs[Long]("max_abs_err_pm"))
     }
   }
 

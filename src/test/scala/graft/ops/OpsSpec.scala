@@ -87,151 +87,6 @@ class GopherRulesSpec extends SparkSpec {
   }
 }
 
-class DedupSpec extends SparkSpec {
-
-  /** Write a tiny corpus with planted near-dups as a documents dir. */
-  private lazy val plantedDir: String = {
-    import spark.implicits._
-    val base = "spark group query row data slow small filter customer line the batch value merge extra words here"
-    val nearDup = base.replace("slow", "fast") // 1-token edit
-    val other = "completely different words nothing shared at all zebra yak xylophone quartz jolt"
-    val docs = Seq(
-      (100L, base, "en", "s", 1L),
-      (101L, nearDup, "en", "s", 1L),
-      (102L, other, "en", "s", 1L),
-      (103L, base, "en", "s", 1L) // exact dup of 100
-    ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val tmp = java.nio.file.Files.createTempDirectory("dedup_").toString
-    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    tmp
-  }
-
-  test("d1_dedup_exact groups identical texts") {
-    val out = Dedup.d1_dedup_exact(spark, plantedDir).collect()
-    assert(out.length == 3)
-    val dupRow = out.find(_.getAs[Long]("keep_id") == 100L).get
-    assert(dupRow.getAs[Long]("dup_count") == 2)
-  }
-
-  test("d2_dedup_minhash finds planted near-dup pair, not unrelated docs") {
-    val pairs = Dedup.d2_dedup_minhash(spark, plantedDir)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(pairs.contains((100L, 101L)) || pairs.contains((100L, 103L)))
-    assert(!pairs.exists(p => p._1 == 102L || p._2 == 102L))
-  }
-
-  test("d2 on testdata finds the generator's planted near-dups") {
-    val out = Dedup.d2_dedup_minhash(spark, sfDir)
-    assert(out.count() > 0)
-    assert(out.agg(min("jaccard")).collect().head.getDouble(0) >= 0.7)
-  }
-
-  test("d3_dedup_simhash: near-identical docs collide, hamming small") {
-    val out = Dedup.d3_dedup_simhash(spark, plantedDir).collect()
-    val pairs = out.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(pairs.contains((100L, 103L))) // exact dup → hamming 0
-    val exact = out.find(r => r.getAs[Long]("id_a") == 100L && r.getAs[Long]("id_b") == 103L).get
-    assert(exact.getAs[Long]("hamming") == 0L)
-  }
-
-  test("d4_ngram_jaccard ranks candidates by exact jaccard") {
-    val out = Dedup.d4_ngram_jaccard(spark, sfDir).collect()
-    assert(out.nonEmpty)
-    val j = out.map(_.getAs[Double]("jaccard"))
-    assert(j.sameElements(j.sortBy(-_: Double)), "descending jaccard order")
-  }
-
-  test("d6_dedup_clusters: chained near-dups collapse into one cluster with one keeper") {
-    val out = Dedup.d6_dedup_clusters(spark, plantedDir).collect()
-    val byDoc = out.map(r => r.getAs[Long]("doc_id") ->
-      (r.getAs[Long]("cluster_id"), r.getAs[Boolean]("keep"))).toMap
-    // 100, 101 (1-token edit) and 103 (exact copy of 100) chain into one cluster
-    assert(byDoc(100L)._1 == 100L && byDoc(100L)._2)
-    assert(byDoc(101L)._1 == 100L && !byDoc(101L)._2)
-    assert(byDoc(103L)._1 == 100L && !byDoc(103L)._2)
-    assert(!byDoc.contains(102L), "unrelated doc has no near-dup edges")
-  }
-
-  test("d5_embed_dup emits top cosine pairs from LSH buckets") {
-    val out = Dedup.d5_embed_dup(spark, sfDir).collect()
-    assert(out.nonEmpty && out.length <= 100)
-    assert(out.forall(r => math.abs(r.getAs[Double]("cosine")) <= 1.0001))
-  }
-
-  test("d5 skew guard: a degenerate bucket is dropped, small buckets survive") {
-    import spark.implicits._
-    val e0 = Array.tabulate(64)(i => if (i == 0) 1f else 0f)
-    val neg = e0.map(-_)
-    // 2 vectors in one small bucket + 600 identical vectors that all land
-    // in a single degenerate bucket (the exact shape the cap exists for)
-    val df = (Seq(1L -> e0, 2L -> e0) ++ (100L until 700L).map(_ -> neg))
-      .toDF("vec_id", "embedding")
-    val guarded = Dedup
-      .embedNearDupPairs(df, planes = 8, seed = 7L, maxBucket = 500, topN = 5000)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(guarded == Set((1L, 2L)),
-      s"degenerate bucket must be pruned, small bucket kept; got $guarded")
-    // same data without the cap: the quadratic pair set reappears —
-    // proving it is the guard doing the pruning, not the bucketing
-    val unguarded = Dedup
-      .embedNearDupPairs(df, planes = 8, seed = 7L, maxBucket = 1000000, topN = 5000)
-      .count()
-    assert(unguarded > 1000)
-  }
-
-  test("d6/clusterLabels: a >12-hop chain reports non-convergence, not wrong labels") {
-    import spark.implicits._
-    // path graph 0-1-2-…-20: min-label needs 20 rounds to reach the tail
-    val chain = (0L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val capped = Dedup.clusterLabels(chain, maxRounds = 6)
-    assert(!capped.converged && capped.rounds == 6)
-    val full = Dedup.clusterLabels(chain, maxRounds = 25)
-    assert(full.converged && full.rounds <= 25)
-    assert(full.labels.filter(col("label") =!= 0L).count() == 0,
-      "fully propagated chain collapses to the minimum label")
-  }
-
-  test("d6/clusterLabelsStar: logarithmic rounds collapse a chain far past the label-prop cap") {
-    import spark.implicits._
-    // path graph 0-1-…-60: label propagation needs 60 rounds (diameter);
-    // star contraction is logarithmic in component SIZE, not diameter
-    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val star = Dedup.clusterLabelsStar(chain, maxRounds = 20)
-    assert(star.converged, s"star contraction should converge, took ${star.rounds} rounds")
-    assert(star.rounds <= 12, s"rounds should be logarithmic, got ${star.rounds}")
-    assert(star.labels.filter(col("label") =!= 0L).count() == 0,
-      "every chain node labels to the component minimum")
-    assert(star.labels.count() == 61)
-    // multiple components + a cycle: same contract as clusterLabels
-    val mixed = Seq((5L, 6L), (6L, 7L), (7L, 5L), (10L, 11L), (3L, 9L)).toDF("id_a", "id_b")
-    val res = Dedup.clusterLabelsStar(mixed)
-    assert(res.converged)
-    val labels = res.labels.collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
-    assert(labels == Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L, 3L -> 3L, 9L -> 3L))
-  }
-
-  test("d6/clusterLabelsAuto escalates a wide component from label-prop to star contraction") {
-    import spark.implicits._
-    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // propagation cap of 6 cannot close a 60-hop chain → star takes over
-    val res = Dedup.clusterLabelsAuto(chain, propRounds = 6)
-    assert(res.converged)
-    assert(res.labels.filter(col("label") =!= 0L).count() == 0)
-  }
-
-  test("clusterLabels with a reliable checkpoint dir propagates identically") {
-    import spark.implicits._
-    val pairs = Seq((5L, 6L), (6L, 7L), (10L, 11L)).toDF("id_a", "id_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val res = Dedup.clusterLabels(pairs, maxRounds = 12, checkpointDir = Some(dir))
-    assert(res.converged)
-    val labels = res.labels.collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
-    assert(labels == Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L))
-  }
-}
-
 class SimilaritySpec extends SparkSpec {
 
   test("s1_ann_topk: 5 exact neighbors per query, cosine descending") {
