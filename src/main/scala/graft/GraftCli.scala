@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Drop-in CLI mirroring the reference's command surface
   * (reference: src/main.rs:29-38 — Check / Run / Test{fail_fast} / Docs):
   *
-  *   runMain graft.GraftCli check|run|run-incremental|test|docs
+  *   runMain graft.GraftCli check|run|run-incremental|seed|test|docs
   *     [--project <dir>]      directory containing powersql.toml (default .)
   *     [--data <dir>]         parquet table dir; only sources the DAG +
   *                            tests actually reference are registered
@@ -30,7 +30,7 @@ object GraftCli {
 
   def main(args: Array[String]): Unit = {
     val cmd = args.headOption.getOrElse {
-      System.err.println("usage: GraftCli check|run|seed|test|docs [--project d] [--data d] [--warehouse d] [--fail-fast]")
+      System.err.println("usage: GraftCli check|run|run-incremental|seed|test|docs [--project d] [--data d] [--warehouse d] [--fail-fast] [--select expr]")
       sys.exit(2)
     }
     def flag(name: String): Option[String] =

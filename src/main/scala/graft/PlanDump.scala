@@ -28,7 +28,7 @@ object PlanDump {
     val outDir = new java.io.File(args(1))
     val tag = args(2)
     val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet)
+      if (args.length > 3) Some(args(3).stripPrefix("only=").split(',').map(_.trim).filter(_.nonEmpty).toSet)
       else None
     outDir.mkdirs()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -196,13 +196,12 @@ final class ModelEngine(spark: SparkSession) {
     * so downstream models read the warehouse copy — the same
     * lineage-cut discipline as TableModel materialization.
     */
-  def seed(seeds: Seq[(String, DataFrame)], warehouse: String): Unit =
+  def seed(seeds: Seq[(String, DataFrame)], warehouse: String): Unit = {
+    val sink = TableSink.parquet(warehouse)
     seeds.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$warehouse/$name")
-      // the just-written schema is known — skip the footer-inference pass
-      spark.read.schema(ModelEngine.nullableSchema(df.schema)).parquet(s"$warehouse/$name")
-        .createOrReplaceTempView(name)
+      sink.materialize(spark, name, df).createOrReplaceTempView(name)
     }
+  }
 
   /** dbt-style SNAPSHOT (check strategy): SCD2-merge the source's
     * current state into the warehouse snapshot table. First run opens
@@ -330,9 +329,8 @@ final class ModelEngine(spark: SparkSession) {
     require(fs.rename(nextP, hPath),
       s"snapshot '$name': swap rename $nextP -> $hPath failed")
     if (fs.exists(oldP)) fs.delete(oldP, true)
-    // re-read with merged's own schema (nullable — parquet read
-    // convention): no footer-inference pass over the just-written table
-    spark.read.schema(ModelEngine.nullableSchema(merged.schema)).parquet(path)
+    // re-read with merged's own schema: no footer-inference pass
+    TableSink.readBack(spark, path, merged.schema)
   }
 
   /** Own-definition hash per model — NO upstream chaining. The chained
@@ -343,11 +341,8 @@ final class ModelEngine(spark: SparkSession) {
     * `state:modified` ≡ `state:modified+` and lose the distinction dbt
     * users rely on in slim CI.
     */
-  def definitionHashes(models: Seq[ModelStatement]): Map[String, String] = {
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-    models.map(m => m.name ->
-      digest.digest(m.query.getBytes("UTF-8")).map("%02x".format(_)).mkString).toMap
-  }
+  def definitionHashes(models: Seq[ModelStatement]): Map[String, String] =
+    models.map(m => m.name -> ModelEngine.sha256(m.query)).toMap
 
   private def stateFile(warehouse: String) =
     new java.io.File(warehouse, "_graft_state.properties")
@@ -365,17 +360,9 @@ final class ModelEngine(spark: SparkSession) {
     * every unselected model as baseline-unknown.
     */
   def saveState(models: Seq[ModelStatement], warehouse: String): Unit = {
-    new java.io.File(warehouse).mkdirs()
-    val props = new java.util.Properties()
     val f = stateFile(warehouse)
-    if (f.exists()) {
-      val in = new java.io.FileInputStream(f)
-      try props.load(in) finally in.close()
-    }
-    definitionHashes(models).foreach { case (k, v) => props.setProperty(k, v) }
-    val out = new java.io.FileOutputStream(f)
-    try props.store(out, "graft state manifest (definition hashes)")
-    finally out.close()
+    ModelEngine.writeHashes(f, ModelEngine.readHashes(f) ++ definitionHashes(models),
+      "graft state manifest (definition hashes)")
   }
 
   /** Models whose definition differs from the warehouse's saved state:
@@ -386,20 +373,17 @@ final class ModelEngine(spark: SparkSession) {
     * surface here — there is nothing to build for them.
     */
   def modifiedSince(models: Seq[ModelStatement], warehouse: String): Set[String] = {
-    val f = stateFile(warehouse)
-    if (!f.exists()) return models.map(_.name).toSet
-    val previous = new java.util.Properties()
-    val in = new java.io.FileInputStream(f)
-    try previous.load(in) finally in.close()
+    val previous = ModelEngine.readHashes(stateFile(warehouse))
     definitionHashes(models).collect {
-      case (name, h) if previous.getProperty(name) != h => name
+      case (name, h) if !previous.get(name).contains(h) => name
     }.toSet
   }
 
   /** `run` with a pluggable materialization target — parquet warehouse by
     * default, or a JDBC warehouse (PostgreSQL-parity with the reference's
     * `execute.rs:52-76`, which lands every table model in the user's warehouse
-    * database) via `TableSink.jdbc`.
+    * database) via `TableSink.jdbc`. This is the one loop that builds
+    * models: `run`, `runIncremental` and the CLI's `--select` all end here.
     */
   def run(models: Seq[ModelStatement], sink: TableSink): Unit = {
     val byName = models.map(m => m.name -> m).toMap
@@ -450,66 +434,39 @@ final class ModelEngine(spark: SparkSession) {
 
   /** Incremental `run`: a table model is rebuilt only when its content
     * hash — its own SQL chained with the hashes of every transitive
-    * upstream model — differs from the manifest of the previous run (or
-    * its materialized output is missing). Unchanged tables re-register
-    * from the existing parquet without touching the data. At 100 TB the
-    * difference between "rebuild the whole DAG" and "rebuild the one
-    * branch that changed" is the pipeline's entire cost; the hash chain
-    * guarantees an upstream edit rebuilds everything downstream of it.
+    * upstream model — differs from the manifest of the previous run, or
+    * its materialized output is missing. Unchanged tables re-attach from
+    * the warehouse (`registerWarehouse`, no job); everything else builds
+    * through `run`'s level loop. At 100 TB the difference between
+    * "rebuild the whole DAG" and "rebuild the one branch that changed" is
+    * the pipeline's entire cost; the hash chain guarantees an upstream
+    * edit rebuilds everything downstream of it.
     *
     * Returns per-model status: built | skipped | view.
     */
   def runIncremental(models: Seq[ModelStatement], warehouse: String): Map[String, String] = {
     val byName = models.map(m => m.name -> m).toMap
     val deps = dependencies(models)
-    val levels = topoLevels(deps)
-
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-    def sha(s: String): String =
-      digest.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val hashes = scala.collection.mutable.Map.empty[String, String]
-    for (level <- levels; name <- level)
-      hashes(name) = sha(byName(name).query + "|" + deps(name).sorted.map(hashes).mkString(","))
+    for (level <- topoLevels(deps); name <- level)
+      hashes(name) = ModelEngine.sha256(
+        byName(name).query + "|" + deps(name).sorted.map(hashes).mkString(","))
 
-    val manifestFile = new java.io.File(warehouse, "_graft_manifest.properties")
-    val previous = new java.util.Properties()
-    if (manifestFile.exists()) {
-      val in = new java.io.FileInputStream(manifestFile)
-      try previous.load(in) finally in.close()
-    }
+    val manifest = new java.io.File(warehouse, "_graft_manifest.properties")
+    val previous = ModelEngine.readHashes(manifest)
+    val reused = models.collect {
+      case m: TableModel if previous.get(m.name).contains(hashes(m.name)) &&
+        ModelEngine.warehouseTableExists(spark, warehouse, m.name) => m.name
+    }.toSet
+    registerWarehouse(models.filter(m => reused(m.name)), warehouse)
+    run(models.filterNot(m => reused(m.name)), TableSink.parquet(warehouse))
 
-    val status = Map.newBuilder[String, String]
-    for (level <- levels; name <- level) byName(name) match {
-      case ViewModel(n, q) =>
-        spark.sql(q).createOrReplaceTempView(n)
-        status += n -> "view"
-      case TableModel(n, q) =>
-        val path = s"$warehouse/$n"
-        val unchanged = previous.getProperty(n) == hashes(n) && new java.io.File(path).exists()
-        if (!unchanged) {
-          val df = spark.sql(q)
-          df.write.mode("overwrite").parquet(path)
-          status += n -> "built"
-          // read back with the schema we just wrote (nullable, parquet's
-          // read convention): skips the footer-inference pass per build —
-          // at warehouse scale a file listing + footer read per model per
-          // run (guide §6), and one scheduler job each locally
-          spark.read.schema(ModelEngine.nullableSchema(df.schema)).parquet(path)
-            .createOrReplaceTempView(n)
-        } else {
-          status += n -> "skipped"
-          // built by an earlier run: schema from its footer, no job
-          Sources.parquet(spark, path).createOrReplaceTempView(n)
-        }
-    }
-
-    new java.io.File(warehouse).mkdirs()
-    val next = new java.util.Properties()
-    hashes.foreach { case (k, v) => next.setProperty(k, v) }
-    val out = new java.io.FileOutputStream(manifestFile)
-    try next.store(out, "graft incremental-run manifest") finally out.close()
+    ModelEngine.writeHashes(manifest, hashes.toMap, "graft incremental-run manifest")
     saveState(models, warehouse) // completed build = valid state:modified base
-    status.result()
+    models.map {
+      case ViewModel(n, _) => n -> "view"
+      case TableModel(n, _) => n -> (if (reused(n)) "skipped" else "built")
+    }.toMap
   }
 
   /** `test`: run the ASSERTs as `SELECT (cond) AS condition` (reference:
@@ -715,24 +672,31 @@ final class ModelEngine(spark: SparkSession) {
 
 object ModelEngine {
 
-  /** The schema a parquet READ of a just-written frame reports: every
-    * field (recursively) nullable — Spark's file-source read convention.
-    * Supplying it to the read-back skips the footer-inference pass.
-    * (StructType.asNullable is private[spark]; this is its public twin.)
+  /** Lower-case hex SHA-256 of the UTF-8 bytes: the definition and the
+    * chained model hashes.
     */
-  private[model] def asNullable(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case st: StructType => StructType(st.fields.map(f =>
-        f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case at: ArrayType => at.copy(elementType = asNullable(at.elementType), containsNull = true)
-      case mt: MapType => mt.copy(keyType = asNullable(mt.keyType),
-        valueType = asNullable(mt.valueType), valueContainsNull = true)
-      case other => other
+  private def sha256(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** A model → hash properties file (`_graft_state.properties`,
+    * `_graft_manifest.properties`); a missing file reads as empty.
+    */
+  private def readHashes(f: java.io.File): Map[String, String] =
+    if (!f.exists()) Map.empty
+    else {
+      import scala.jdk.CollectionConverters._
+      val props = new java.util.Properties()
+      scala.util.Using.resource(new java.io.FileInputStream(f))(props.load(_))
+      props.asScala.toMap
     }
+
+  private def writeHashes(f: java.io.File, hashes: Map[String, String], comment: String): Unit = {
+    f.getParentFile.mkdirs()
+    val props = new java.util.Properties()
+    hashes.foreach { case (k, v) => props.setProperty(k, v) }
+    scala.util.Using.resource(new java.io.FileOutputStream(f))(props.store(_, comment))
   }
-  private[model] def nullableSchema(st: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    asNullable(st).asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** Does `warehouse/table` exist? Through the Hadoop FileSystem API so
     * hdfs:// and s3a:// warehouses answer correctly — a java.io.File

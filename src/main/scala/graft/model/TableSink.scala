@@ -1,6 +1,7 @@
 package graft.model
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Materialization target for `CREATE TABLE` models: write the model's
   * result, then hand back a frame READING the materialized copy (so
@@ -19,20 +20,40 @@ trait TableSink {
 
 object TableSink {
 
-  /** Parquet warehouse: one directory per table model. The read-back
-    * supplies the schema just written (nullable — parquet's read
-    * convention), so registering the materialized copy never pays a
-    * footer-inference pass: at warehouse scale that is a listing +
-    * footer read per model per run (guide §6), and locally one
-    * scheduler job each.
+  /** Parquet warehouse: one directory per table model. `run`,
+    * `runIncremental` and `seed` all write through it. The read-back
+    * supplies the schema just written (`readBack`), so registering the
+    * materialized copy never pays a footer-inference pass: at warehouse
+    * scale that is a listing + footer read per model per run (guide §6),
+    * and locally one scheduler job each.
     */
   def parquet(warehouse: String): TableSink = new TableSink {
     override def materialize(spark: SparkSession, name: String, df: DataFrame): DataFrame = {
       val path = s"$warehouse/$name"
       df.write.mode("overwrite").parquet(path)
-      spark.read.schema(ModelEngine.nullableSchema(df.schema)).parquet(path)
+      readBack(spark, path, df.schema)
     }
     override def toString: String = s"TableSink.parquet($warehouse)"
+  }
+
+  /** Re-read a parquet table just written from a frame of `schema`. The
+    * read supplies that schema made nullable (Spark's file-source read
+    * convention), so it schedules no footer-inference job. The one place
+    * the model layer decides how a written table is re-read.
+    */
+  private[model] def readBack(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(asNullable(schema).asInstanceOf[StructType]).parquet(path)
+
+  /** Every field, element and value nullable, recursively
+    * (StructType.asNullable is private[spark]; this is its public twin).
+    */
+  private def asNullable(dt: DataType): DataType = dt match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case at: ArrayType => at.copy(elementType = asNullable(at.elementType), containsNull = true)
+    case mt: MapType => mt.copy(keyType = asNullable(mt.keyType),
+      valueType = asNullable(mt.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** JDBC warehouse: each table model becomes a database table

@@ -157,17 +157,4 @@ object EventStream {
       }
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .start()
-
-  /** Convenience: run a streaming query over a stream to a named memory
-    * sink and block until all available input is processed (test/dev).
-    */
-  def runToMemory(df: DataFrame, name: String, outputMode: OutputMode): Unit = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-  }
 }

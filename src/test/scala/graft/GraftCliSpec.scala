@@ -50,6 +50,26 @@ class GraftCliSpec extends SparkSpec {
       s"docs must render column lineage, got:\n$docs")
   }
 
+  test("run-incremental builds, then skips an unchanged table model") {
+    Tables(spark, sfDir).registerAll()
+    val wh = s"$projectDir/wh_inc"
+    def runIncremental(): (Int, String) = {
+      val out = new java.io.ByteArrayOutputStream()
+      val code = Console.withOut(out) {
+        GraftCli.execute(spark, "run-incremental", projectDir, wh, failFast = false)
+      }
+      (code, out.toString)
+    }
+    val (code1, out1) = runIncremental()
+    assert(code1 == 0)
+    assert(out1.contains("rev_per_customer: built") && out1.contains("revenue: view"),
+      s"first run must build the table and report the view, got:\n$out1")
+    val (code2, out2) = runIncremental()
+    assert(code2 == 0)
+    assert(out2.contains("rev_per_customer: skipped"),
+      s"second run must skip the unchanged table, got:\n$out2")
+  }
+
   test("test command returns nonzero exit code on failing assertion") {
     Tables(spark, sfDir).registerAll()
     java.nio.file.Files.writeString(

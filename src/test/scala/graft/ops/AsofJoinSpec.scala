@@ -87,32 +87,3 @@ class SkewSpec extends SparkSpec {
     assert(autoU.count() == uniform.join(dim, col("k") === col("dk")).count())
   }
 }
-
-class IncrementalRunSpec extends SparkSpec {
-  import graft.model._
-
-  test("runIncremental skips unchanged tables, rebuilds edited branches") {
-    Tables(spark, sfDir).registerAll()
-    val wh = java.nio.file.Files.createTempDirectory("graft_inc_").toString
-    val engine = new ModelEngine(spark)
-    val v1 = ModelParser.parseModelFile(
-      """CREATE VIEW inc_base AS SELECT o_custkey, o_totalprice FROM orders;
-        |CREATE TABLE inc_mid AS SELECT o_custkey, COUNT(*) AS n FROM inc_base GROUP BY o_custkey;
-        |CREATE TABLE inc_top AS SELECT COUNT(*) AS n_customers FROM inc_mid""".stripMargin)
-
-    val first = engine.runIncremental(v1, wh)
-    assert(first == Map("inc_base" -> "view", "inc_mid" -> "built", "inc_top" -> "built"))
-
-    val second = engine.runIncremental(v1, wh)
-    assert(second == Map("inc_base" -> "view", "inc_mid" -> "skipped", "inc_top" -> "skipped"))
-    assert(spark.table("inc_top").collect().head.getLong(0) > 0)
-
-    // editing the mid model must rebuild mid AND its downstream
-    val v2 = ModelParser.parseModelFile(
-      """CREATE VIEW inc_base AS SELECT o_custkey, o_totalprice FROM orders;
-        |CREATE TABLE inc_mid AS SELECT o_custkey, COUNT(*) AS n FROM inc_base WHERE o_totalprice > 0 GROUP BY o_custkey;
-        |CREATE TABLE inc_top AS SELECT COUNT(*) AS n_customers FROM inc_mid""".stripMargin)
-    val third = engine.runIncremental(v2, wh)
-    assert(third == Map("inc_base" -> "view", "inc_mid" -> "built", "inc_top" -> "built"))
-  }
-}
