@@ -126,7 +126,6 @@ object Bench {
     // full sequential run. Force the GC between entries, then give the
     // cleaner's ASYNC work (RPC + shuffle-file deletes) a beat to drain
     // so it doesn't overlap — and tax — the next timed entry.
-    // SPARK_GRAFT_BENCH_GC=0 disables (for A/B-ing the GC's own effect)
     // Drain duration: the cleaner's deletes are async RPC + filesystem
     // work — on a loaded machine (the driver box runs more than this
     // bench) 150 ms was observably not always enough, and a delete burst
@@ -134,8 +133,7 @@ object Bench {
     // (q42's r4 driver wobble: 0.78 s vs a 0.31-0.46 s local envelope
     // over 4 runs). The sleep is OUTSIDE every timed window, so it never
     // inflates any reported number.
-    val gcBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") != "0"
-    def reclaim(): Unit = if (gcBetween) {
+    def reclaim(): Unit = {
       System.gc()
       Thread.sleep(250)
     }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tool (optimization rounds): for every SparkEntry query,
@@ -38,20 +37,6 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.init(spark)
     val mode = ExplainMode.fromString("formatted")
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobCounter.incrementAndGet()
-    })
-    // listener bus is async: wait until the counter stops moving
-    def quiescentJobs(): Int = {
-      var prev = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val v = jobCounter.get()
-        if (v == prev) stable += 1 else { stable = 0; prev = v }
-      }
-      jobCounter.get()
-    }
     var failed = List.empty[String]
     val profile = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -59,12 +44,12 @@ object PlanDump {
       .foreach { case (name, fn) =>
         spark.sparkContext.setJobDescription(s"plandump: $name")
         try {
-          jobCounter.set(0)
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          df.count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val jobs = quiescentJobs()
+          val ((df, wall), jobs) = JobCounter.count(spark.sparkContext) {
+            val t0 = System.nanoTime()
+            val df = fn(spark, sfDir)
+            df.count()
+            (df, (System.nanoTime() - t0) / 1e9)
+          }
           val txt = df.queryExecution.explainString(mode)
           val exchanges = txt.linesIterator.count(_.trim.matches("\\(\\d+\\) Exchange( .*)?"))
           val w = new java.io.PrintWriter(new java.io.File(outDir, s"${name}_$tag.txt"))

@@ -5,19 +5,31 @@ import graft.Caching.PersistSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over the embeddings table
-  * (SURVEY §2C). Two paths:
+/** Nearest-neighbor and retrieval search over the embeddings and
+  * documents tables (SURVEY §2C): the s1–s15 family. Every vector entry
+  * probes with the same query set (the first 10 vectors; 3 for s7) and
+  * ranks on the same rounded cosine with a neighbor_id tiebreak, so the
+  * exact paths are hashed against DuckDB and the trained ones carry a
+  * recall contract against the exact baseline:
   *
-  *  - s1: brute-force exact top-k — the small-query-set baseline: the
-  *    query side is broadcast, the corpus is scanned exactly once, and
-  *    per-query ranking is a window over query_id (corpus-partitioned
-  *    work; no corpus shuffle at all when k·|Q| is small).
-  *  - s2: random-hyperplane LSH — the 100 TB path: the corpus is
-  *    bucketed once (narrow map), queries probe only their bucket, so
-  *    scored pairs shrink by ~2^planes.
+  *  - exact scans (broadcast queries, one corpus pass): s1 top-k, s4
+  *    k-NN vote, s11 MMR, s12 range, s13 filtered, and s7's dense half;
+  *  - hyperplane LSH (corpus bucketed once): s2 single-probe, s5
+  *    multi-probe, s14 its recall report, s15 the kNN graph;
+  *  - compressed indexes, shortlist then exact rerank — the
+  *    local-shortlist → global-rerank shape: s3 IVF, s6 PQ, s9 IVF-PQ,
+  *    s10 int8 SQ;
+  *  - lexical: s8 BM25, and s7's keyword half fused by RRF.
   *
-  * Vector math is zip_with/aggregate over array columns — codegen'd,
-  * no UDFs.
+  * The steps they share are written once: [[queryFrame]] (the query
+  * side), [[cosine]] / [[scoreNeighbors]] (the rounded score),
+  * [[topKPerQuery]] (bounded-heap cut + rank), [[rerank]] (shortlist →
+  * exact top-5), [[trainCoarseCentroids]] (the IVF quantizer),
+  * [[trainPq]] (the PQ codebooks) and [[recallEntry]] (s3/s6/s9's
+  * contract over one persisted [[unitFrame]]).
+  *
+  * Vector math runs on native codegen'd expressions (DotProduct,
+  * L2Normalize) — no UDFs.
   */
 object Similarity {
 
@@ -72,9 +84,26 @@ object Similarity {
       s"(CASE WHEN list_dot_product($unitCol, $lits) > 0 THEN ${1L << p} ELSE 0 END)"
     }.mkString(" + ")
 
-  private def queries(unit: DataFrame, nQueries: Int): DataFrame =
-    unit.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit"), col("bucket").as("qbucket"))
+  /** The persisted (vec_id, unit) frame the compressed indexes build
+    * over: normalized once, read by training, encoding and rerank.
+    */
+  private[ops] def unitFrame(spark: SparkSession, dir: String): DataFrame =
+    graft.Caching.persist(withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit"))
+
+  /** The query side: the first `n` vectors as (query_id, qunit, extra…). */
+  private def queryFrame(unit: DataFrame, n: Int, extra: Column*): DataFrame =
+    unit.filter(col("vec_id") < n)
+      .select(Seq(col("vec_id").as("query_id"), col("unit").as("qunit")) ++ extra: _*)
+
+  /** The score every ranked entry orders and ties on: query-to-doc
+    * cosine rounded to 1e-6, so rank order is engine-independent.
+    */
+  private def cosine(name: String = "cosine"): Column =
+    round(dot(col("qunit"), col("unit")), 6).as(name)
+
+  /** (query_id, neighbor_id, cosine) of a query × corpus candidate frame. */
+  private def scoreNeighbors(cands: DataFrame): DataFrame =
+    cands.select(col("query_id"), col("vec_id").as("neighbor_id"), cosine())
 
   /** Top-k scored neighbors per query. The k-selection runs through the
     * native bounded-heap operator (graft.plans.TopKPerGroup) — no sort of
@@ -104,16 +133,25 @@ object Similarity {
     exactTopK(withUnit(Tables(spark, dir).embeddings))
 
   /** Exact scoring over a pre-normalized frame — shared by s1 and the
-    * s3 recall contract so the normalization pass runs once.
+    * recall baseline so the normalization pass runs once.
     */
-  private def exactTopK(unitDf: DataFrame): DataFrame = {
-    val unit = unitDf.withColumn("bucket", lit(0L))
-    val q = broadcast(queries(unit, 10))
-    val scored = unit.join(q, col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(scored, 5)
+  private def exactTopK(unit: DataFrame): DataFrame =
+    topKPerQuery(scoreNeighbors(
+      unit.join(broadcast(queryFrame(unit, 10)), col("vec_id") =!= col("query_id"))), 5)
+
+  /** The tail of every compressed index (s6, s9, s10): keep each
+    * query's top `nShort` candidates by the approximate `score` (vec_id
+    * tiebreak) through the native bounded heap, join the survivors back
+    * to their full vectors and the broadcast query vectors, and rank the
+    * exact rounded cosine — top 5 per query. Rerank reads
+    * O(nShort·|Q|) rows, never O(corpus).
+    */
+  private[ops] def rerank(scored: DataFrame, score: String, nShort: Int,
+                          unit: DataFrame): DataFrame = {
+    val shortlist = graft.plans.TopKPerGroup
+      .topKPerGroup(scored, Seq("query_id"), Seq((score, false), ("vec_id", true)), nShort)
+    topKPerQuery(scoreNeighbors(shortlist.join(unit, Seq("vec_id"))
+      .join(broadcast(queryFrame(unit, 10)), Seq("query_id"))), 5)
   }
 
   /** DuckDB mirror of s1: same normalize→dot→round→rank pipeline.
@@ -142,6 +180,10 @@ object Similarity {
       |FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin
 
+  /** IVF shape shared by s3 and s9: Nlist coarse cells, Nprobe probed. */
+  private val Nlist = 16
+  private val Nprobe = 4
+
   /** IVF-style ANN ranking: a coarse quantizer (nlist centroids trained
     * with 2 distributed Lloyd iterations) partitions the corpus into
     * inverted lists; each query probes its `nprobe` nearest lists and
@@ -153,15 +195,20 @@ object Similarity {
     * aren't cross-engine hashable — the driver entry (s3_ann_ivf) checks
     * the recall INVARIANT against the exact s1 baseline instead.
     */
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTopKFromUnit(graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit")))
+  private[ops] def ivfTopK(unit: DataFrame): DataFrame = {
+    val centroids = trainCoarseCentroids(unit, Nlist, 2)
+    // assign corpus to inverted lists; queries probe Nprobe lists
+    val scored = assignToCentroid(unit, centroids)
+      .join(broadcast(probedCells(unit, centroids)), Seq("cluster"))
+      .filter(col("vec_id") =!= col("query_id"))
+    topKPerQuery(scoreNeighbors(scored), 5)
+  }
 
   /** Coarse quantizer training: deterministic init (first nlist unit
     * vectors) + `rounds` distributed Lloyd iterations. Driver state is
     * nlist×64 doubles — O(centroids), never O(corpus); each round is one
-    * narrow assignment pass + a 1024-row means aggregate. Shared by the
-    * IVF (s3) and IVF-PQ (s9) paths.
+    * narrow assignment pass + a 1024-row means aggregate. An empty
+    * cluster resets to the zero vector.
     */
   private def trainCoarseCentroids(unit: DataFrame, nlist: Int,
                                    rounds: Int): Array[Array[Double]] = {
@@ -185,24 +232,13 @@ object Similarity {
     centroids
   }
 
-  private def ivfTopKFromUnit(unit: DataFrame): DataFrame = {
-    val nlist = 16
-    val nprobe = 4
-
-    val centroids = trainCoarseCentroids(unit, nlist, 2)
-
-    // --- assign corpus to inverted lists; queries probe nprobe lists ---
-    val lists = assignToCentroid(unit, centroids)
-    val queryProbes = unit.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit"))
-      .withColumn("probes", slice(sortCentroidsByScore(col("qunit"), centroids), 1, nprobe))
+  /** Each query's Nprobe best-scoring cells: one (query_id, qunit,
+    * cluster) row per probe.
+    */
+  private def probedCells(unit: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    queryFrame(unit, 10)
+      .withColumn("probes", slice(sortCentroidsByScore(col("qunit"), centroids), 1, Nprobe))
       .select(col("query_id"), col("qunit"), explode(col("probes")).as("cluster"))
-    val scored = lists.join(broadcast(queryProbes),
-        Seq("cluster")).filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(scored, 5)
-  }
 
   /** Minimum acceptable mean recall@5 of the IVF path (nprobe=4 of
     * nlist=16) against the exact s1 baseline.
@@ -238,21 +274,24 @@ object Similarity {
     }
   }
 
-  private def exactBaselinePairs(spark: SparkSession, dir: String): Seq[(Long, Long)] =
+  private def exactBaselinePairs(spark: SparkSession, dir: String,
+                                 unit: DataFrame): Seq[(Long, Long)] =
     exactPairsCache.computeIfAbsent(s"$dir@${embeddingsFingerprint(spark, dir)}", _ =>
-      exactTopK(withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit"))
-        .select("query_id", "neighbor_id")
+      exactTopK(unit).select("query_id", "neighbor_id")
         .collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
 
   /** One-row (n_queries, k, recall_ok) contract of an ANN result against
     * the exact baseline pairs: recall@k = |exact ∩ ann| / (n_queries·k).
-    * The exact side is a ≤50-row local frame; the only distributed work
-    * is the ANN pipeline under test.
+    * n_queries and k are read off the ≤50 collected pairs on the driver;
+    * the only distributed work is the ANN pipeline under test. An empty
+    * baseline (empty corpus) has no recall: the row is (0, 0, null).
     */
   private def recallContract(ann: DataFrame, pairs: Seq[(Long, Long)],
                              minRecall: Double): DataFrame = {
     val spark = ann.sparkSession
     import spark.implicits._
+    val nQueries = pairs.map(_._1).distinct.size.toLong
+    val k = if (nQueries == 0) 0L else pairs.size / nQueries
     val exactDf = broadcast(pairs.toDF("query_id", "neighbor_id"))
     // distinct BEFORE counting hits: an ANN result that emits the same
     // (query, neighbor) pair twice (multi-probe overlap, un-deduped
@@ -262,14 +301,21 @@ object Similarity {
     // the ANN pipeline from the entry's explain output; kept lazy.)
     val hits = ann.select("query_id", "neighbor_id").distinct()
       .join(exactDf, Seq("query_id", "neighbor_id"), "left_semi")
-    exactDf.agg(
-        countDistinct(col("query_id")).as("n_queries"),
-        (count(lit(1)) / countDistinct(col("query_id"))).cast("long").as("k"))
-      .join(hits.agg(count(lit(1)).as("n_hits")))
-      .select(
-        col("n_queries"), col("k"),
-        (col("n_hits").cast("double") / (col("n_queries") * col("k"))
-          >= minRecall).as("recall_ok"))
+    val recallOk =
+      if (nQueries * k == 0) lit(null).cast("boolean")
+      else col("n_hits").cast("double") / (nQueries * k) >= minRecall
+    hits.agg(count(lit(1)).as("n_hits"))
+      .select(lit(nQueries).as("n_queries"), lit(k).as("k"), recallOk.as("recall_ok"))
+  }
+
+  /** The entry shape of the trained indexes (s3, s6, s9): build `index`
+    * over one persisted unit frame and emit its recall contract against
+    * the exact baseline scored over that same frame.
+    */
+  private def recallEntry(spark: SparkSession, dir: String, minRecall: Double)(
+      index: DataFrame => DataFrame): DataFrame = {
+    val unit = unitFrame(spark, dir)
+    recallContract(index(unit), exactBaselinePairs(spark, dir, unit), minRecall)
   }
 
   /** s3_ann_ivf — the IVF operator's driver entry: runs `ivfTopK` and
@@ -280,22 +326,22 @@ object Similarity {
     * though raw IVF rankings are not themselves cross-engine
     * reproducible. [oracle]
     */
-  def s3_ann_ivf(spark: SparkSession, dir: String): DataFrame = {
-    val unit = graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit"))
-    recallContract(ivfTopKFromUnit(unit),
-      exactBaselinePairs(spark, dir), IvfMinRecall)
-  }
+  def s3_ann_ivf(spark: SparkSession, dir: String): DataFrame =
+    recallEntry(spark, dir, IvfMinRecall)(ivfTopK)
 
   /** Invariant oracle for s3: the literal quality contract. */
   val s3_oracle: String =
     """SELECT CAST(10 AS BIGINT) AS n_queries, CAST(5 AS BIGINT) AS k,
       |       TRUE AS recall_ok""".stripMargin
 
-  /** cluster id = argmax_c dot(unit, centroid_c), ties to lowest id. */
+  /** cluster id = argmax_c dot(unit, centroid_c), ties to lowest id; a
+    * typed null when no centroid was trained (the first Lloyd round over
+    * an empty corpus).
+    */
   private def assignToCentroid(unitDf: DataFrame, centroids: Array[Array[Double]]): DataFrame =
     unitDf.withColumn("cluster",
-      element_at(sortCentroidsByScore(col("unit"), centroids), 1))
+      if (centroids.isEmpty) lit(null).cast("int")
+      else element_at(sortCentroidsByScore(col("unit"), centroids), 1))
 
   /** centroid ids sorted by descending dot-score against `v`. */
   private def sortCentroidsByScore(v: Column, centroids: Array[Array[Double]]): Column = {
@@ -396,13 +442,9 @@ object Similarity {
     */
   def s2_ann_lsh(spark: SparkSession, dir: String): DataFrame = {
     val unit = withHyperplaneBucket(withUnit(Tables(spark, dir).embeddings), planes = 6, seed = 7L)
-    val q = broadcast(queries(unit, 10))
-    val scored = unit
-      .join(q, col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(scored, 5)
+    val q = broadcast(queryFrame(unit, 10, col("bucket").as("qbucket")))
+    topKPerQuery(scoreNeighbors(unit
+      .join(q, col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))), 5)
   }
 
   /** s5_ann_multiprobe — multi-probe LSH (Lv et al., VLDB 2007, public):
@@ -419,18 +461,14 @@ object Similarity {
   def s5_ann_multiprobe(spark: SparkSession, dir: String): DataFrame = {
     val planes = 6
     val unit = withHyperplaneBucket(withUnit(Tables(spark, dir).embeddings), planes, seed = 7L)
-    val probes = queries(unit, 10)
+    val probes = queryFrame(unit, 10, col("bucket").as("qbucket"))
       .withColumn("flip",
         explode(array((lit(0L) +: (0 until planes).map(p => lit(1L << p))).toIndexedSeq: _*)))
       .select(col("query_id"), col("qunit"),
         col("qbucket").bitwiseXOR(col("flip")).as("pbucket"))
-    val scored = unit
+    topKPerQuery(scoreNeighbors(unit
       .join(broadcast(probes),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(scored, 5)
+        col("bucket") === col("pbucket") && col("vec_id") =!= col("query_id"))), 5)
   }
 
   /** DuckDB mirror of s5: same planes, candidates = bucket XOR ∈
@@ -469,14 +507,107 @@ object Similarity {
     */
   val PqMinRecall = 0.7
 
+  /** PQ shape shared by s6 and s9: each 64-dim vector splits into PqM
+    * subvectors of SubDim dims, each encoded as one of PqK codewords.
+    */
+  private val PqM = 16
+  private val PqK = 16
+  private val SubDim = 4
+
+  /** Explodes the 64-dim array column `vec` into PqM rows of
+    * (keep…, sub, `name`): the SubDim-dim slice of subspace `sub`.
+    */
+  private def subvectors(df: DataFrame, vec: String, keep: Seq[String],
+                         name: String): DataFrame =
+    df.select(keep.map(col) :+ explode(array((0 until PqM).map(s =>
+        struct(lit(s).as("sub"), slice(col(vec), s * SubDim + 1, SubDim).as(name))
+      ): _*)).as("sv"): _*)
+      .select(keep.map(col) ++ Seq(col("sv.sub").as("sub"), col(s"sv.$name").as(name)): _*)
+
+  /** Product-quantization codebook training, shared by s6 (subvectors of
+    * the unit vectors) and s9 (subvectors of the IVF residuals) the way
+    * [[trainCoarseCentroids]] is shared by s3 and s9. `subvecs` is
+    * (vec_id, sub, subvec, carry…), hash(vec_id)-partitioned and
+    * persisted by the caller, so every round's groupBy(vec_id, sub) and
+    * the final encode ride that one exchange.
+    *
+    * Deterministic init (the subvectors of docs 0..PqK-1), then `rounds`
+    * Lloyd rounds of ONE job each: the nearest-codeword assign fused into
+    * the per-(sub, code, dim) means collect — 16×16×4 = 1024 keys,
+    * O(codebook) driver state, never O(corpus). A codeword no subvector
+    * chose keeps its previous value.
+    *
+    * Returns the broadcast codebook (sub, code, cvec, cnorm2), the codes
+    * (vec_id, carry…, sub, code) and the corpus row count. The count
+    * rides the last means collect — the (sub = 0, dim = 0) slice holds
+    * one row per vec_id, so its group counts sum to |corpus| — one
+    * count() job fewer.
+    */
+  private[ops] def trainPq(subvecs: DataFrame, rounds: Int,
+                           carry: Seq[String] = Nil): (DataFrame, DataFrame, Long) = {
+    val spark = subvecs.sparkSession
+    import spark.implicits._
+
+    def centDf(cent: Map[(Int, Int), Array[Double]]) =
+      broadcast(cent.toSeq.map { case ((s, c), v) =>
+        (s, c, v.toSeq, v.map(x => x * x).sum)
+      }.toDF("sub", "code", "cvec", "cnorm2"))
+
+    // Nearest codebook entry per (doc, subspace): broadcast join of the
+    // 256-row codebook + max_by aggregate — argmin_c ||subvec − c||² =
+    // argmax_c (dot − ||c||²/2), ties to the lowest code. A
+    // literal-expression formulation (16-branch CASE WHEN over
+    // per-subspace argmax, s3's mechanism) was benchmarked ~2× SLOWER
+    // than this join at sf0.1 — the 256-dot expression tree blows past
+    // codegen method limits and falls back to interpreted eval, while the
+    // join keeps every operator inside whole-stage codegen. Carried
+    // columns ride the aggregate (constant per vec_id, so first() is
+    // deterministic): s9's encode reads `cluster` straight off the codes
+    // instead of joining back to its assigned frame (r15 — one join, two
+    // sorts and an aggregate input scan removed).
+    def assign(cents: DataFrame): DataFrame =
+      subvecs.join(cents, Seq("sub"))
+        .withColumn("score", dot(col("subvec"), col("cvec")) - col("cnorm2") * 0.5)
+        .groupBy("vec_id", "sub")
+        .agg(max_by(col("code"), struct(col("score"), -col("code"))).as("code"),
+          first(col("subvec")).as("subvec") +: carry.map(c => first(col(c)).as(c)): _*)
+
+    var cent: Map[(Int, Int), Array[Double]] = subvecs.filter(col("vec_id") < PqK)
+      .select("sub", "vec_id", "subvec").collect().map { r =>
+        (r.getAs[Int]("sub"), r.getAs[Long]("vec_id").toInt) ->
+          r.getSeq[Double](2).toArray
+      }.toMap
+    var corpusN = 0L
+    for (_ <- 0 until rounds) {
+      val means = assign(centDf(cent))
+        .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("dim", "v")))
+        .groupBy("sub", "code", "dim").agg(avg("v").as("m"), count(lit(1)).as("cnt"))
+        .collect()
+      corpusN = means.filter(r =>
+        r.getAs[Int]("sub") == 0 && r.getAs[Int]("dim") == 0)
+        .map(_.getAs[Long]("cnt")).sum
+      val next = scala.collection.mutable.Map(cent.toSeq: _*)
+      means.groupBy(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"))).foreach {
+        case (key, rows) =>
+          val v = new Array[Double](SubDim)
+          rows.foreach(r => v(r.getAs[Int]("dim")) = r.getAs[Double]("m"))
+          next(key) = v
+      }
+      cent = next.toMap
+    }
+
+    val codebook = centDf(cent)
+    val codes = assign(codebook).select((("vec_id" +: carry) ++ Seq("sub", "code")).map(col): _*)
+    (codebook, codes, corpusN)
+  }
+
   /** s6_ann_pq — product quantization (Jégou et al., TPAMI 2011,
     * public) with asymmetric-distance shortlisting and exact reranking:
     *
     *   1. TRAIN: split each 64-dim unit vector into M=16 subvectors of 4
-    *      dims; per subspace, k-means with K=16 centroids (deterministic
-    *      init = subvectors of the first 16 docs, 2 distributed Lloyd
-    *      rounds). Driver state is 16×16×4 = 1024 doubles — O(codebook),
-    *      never O(corpus).
+    *      dims; per subspace, k-means with K=16 centroids ([[trainPq]],
+    *      3 distributed Lloyd rounds). Driver state is 16×16×4 = 1024
+    *      doubles — O(codebook), never O(corpus).
     *   2. ENCODE: each doc compresses to 16 half-byte-ish codes (argmin
     *      ||subvec − centroid||², via a broadcast join of the 256-row
     *      codebook — K·M dots per doc, the standard PQ encode cost).
@@ -490,20 +621,11 @@ object Similarity {
     *
     * Codebook means are float-sum shuffle-order-dependent (like s3), so
     * the driver entry emits the recall INVARIANT vs the exact s1
-    * baseline. [oracle: literal quality contract]
+    * baseline; over a (vec_id, unit) frame this returns the
+    * exact-reranked top-5 per query with rank. [oracle: literal quality
+    * contract]
     */
-  def pqTopK(spark: SparkSession, dir: String): DataFrame =
-    pqTopKFromUnit(graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit")))
-
-  /** The PQ train→encode→ADC-shortlist→rerank pipeline over a
-    * pre-normalized (vec_id, unit) frame; returns exact-reranked top-5
-    * per query with rank (the user-facing ANN result shape).
-    */
-  private def pqTopKFromUnit(unit: DataFrame): DataFrame = {
-    val spark = unit.sparkSession
-    import spark.implicits._
-    val M = 16; val K = 16; val subDim = 4
+  private[ops] def pqTopK(unit: DataFrame): DataFrame = {
     // hash(vec_id)-partition the persisted training frame ONCE (r15,
     // guide §2.4 "share one exchange"): every Lloyd round's
     // groupBy(vec_id, sub), the final encode, and the ADC
@@ -513,66 +635,9 @@ object Similarity {
     // repartition runs BEFORE the ×16 explode so it moves one row per
     // doc, and explode/select/broadcast-join all preserve the
     // partitioning.
-    val subvecs = unit.repartition(col("vec_id"))
-      .select(col("vec_id"), explode(array((0 until M).map(s =>
-        struct(lit(s).as("sub"), slice(col("unit"), s * subDim + 1, subDim).as("subvec"))
-      ): _*)).as("sv"))
-      .select(col("vec_id"), col("sv.sub").as("sub"), col("sv.subvec").as("subvec"))
+    val subvecs = subvectors(unit.repartition(col("vec_id")), "unit", Seq("vec_id"), "subvec")
       .persistTracked
-
-    def centDf(cent: Map[(Int, Int), Array[Double]]) =
-      broadcast(cent.toSeq.map { case ((s, c), v) =>
-        (s, c, v.toSeq, v.map(x => x * x).sum)
-      }.toDF("sub", "code", "cvec", "cnorm2"))
-
-    // Nearest codebook entry per (doc, subspace): broadcast join of the
-    // 256-row codebook + max_by aggregate — argmin_c ||subvec − c||² =
-    // argmax_c (dot − ||c||²/2), ties to the lowest code. Each Lloyd
-    // round is ONE job (the means collect). A literal-expression
-    // formulation (16-branch CASE WHEN over per-subspace argmax, s3's
-    // mechanism) was benchmarked ~2× SLOWER than this join at sf0.1 —
-    // the 256-dot expression tree blows past codegen method limits and
-    // falls back to interpreted eval, while the join keeps every
-    // operator inside whole-stage codegen. Measured, not guessed.
-    def assign(cents: DataFrame): DataFrame =
-      subvecs.join(cents, Seq("sub"))
-        .withColumn("score", dot(col("subvec"), col("cvec")) - col("cnorm2") * 0.5)
-        .groupBy("vec_id", "sub")
-        .agg(max_by(col("code"), struct(col("score"), -col("code"))).as("code"),
-          first(col("subvec")).as("subvec"))
-
-    // deterministic init: subvectors of docs 0..K-1
-    var cent: Map[(Int, Int), Array[Double]] = subvecs.filter(col("vec_id") < K)
-      .collect().map { r =>
-        (r.getAs[Int]("sub"), r.getAs[Long]("vec_id").toInt) ->
-          r.getSeq[Double](2).toArray
-      }.toMap
-    // corpus row count rides the (already collected) Lloyd means — one
-    // count() job fewer; Σ over codes of the (sub=0, dim=0) group counts
-    // is exactly |unit| (one row per vec_id lands in that slice)
-    var corpusN = 0L
-    for (_ <- 0 until 3) {
-      // one job per Lloyd round: assign fused into the means aggregate
-      // (shuffle carries 16×16×4 = 1024 (sub, code, dim) keys)
-      val means = assign(centDf(cent))
-        .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("dim", "v")))
-        .groupBy("sub", "code", "dim").agg(avg("v").as("m"), count(lit(1)).as("cnt"))
-        .collect()
-      corpusN = means.filter(r =>
-        r.getAs[Int]("sub") == 0 && r.getAs[Int]("dim") == 0)
-        .map(_.getAs[Long]("cnt")).sum
-      val next = scala.collection.mutable.Map(cent.toSeq: _*) // empty clusters keep old centroid
-      means.groupBy(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"))).foreach {
-        case (key, rows) =>
-          val v = new Array[Double](subDim)
-          rows.foreach(r => v(r.getAs[Int]("dim")) = r.getAs[Double]("m"))
-          next(key) = v
-      }
-      cent = next.toMap
-    }
-
-    val codebook = centDf(cent)
-    val codes = assign(codebook).select("vec_id", "sub", "code")
+    val (codebook, codes, corpusN) = trainPq(subvecs, rounds = 3)
 
     // per-query 256-entry LUT (10 queries × 16 subs × 16 codes)
     val lut = subvecs.filter(col("vec_id") < 10)
@@ -586,35 +651,20 @@ object Similarity {
     // flat 50 — the sf10 oracle sweep measured its recall contract red
     // there, while ~0.4% of the corpus surviving to exact rerank keeps
     // recall flat across decades at O(shortlist·|Q|) rerank cost.
-    // (corpusN rides the already-collected Lloyd means — same exact
-    // count, one count() job fewer.)
     val nShort = math.max(50L, corpusN / 250).toInt
     val adc = codes.join(broadcast(lut), Seq("sub", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum(col("partial")).as("approx"))
-    val shortlist = graft.plans.TopKPerGroup
-      .topKPerGroup(adc, Seq("query_id"), Seq(("approx", false), ("vec_id", true)), nShort)
-
-    val rerank = shortlist
-      .join(unit, Seq("vec_id"))
-      .join(broadcast(unit.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("unit").as("qunit"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(rerank, 5)
+    rerank(adc, "approx", nShort, unit)
   }
 
   /** s6's driver entry: runs the PQ pipeline and emits the
     * (n_queries, k, recall_ok) contract against the shared exact
-    * baseline (computed once per JVM, reused by s3).
+    * baseline (computed once per JVM, reused by s3 and s9).
     */
-  def s6_ann_pq(spark: SparkSession, dir: String): DataFrame = {
-    val unit = graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit"))
-    recallContract(pqTopKFromUnit(unit),
-      exactBaselinePairs(spark, dir), PqMinRecall)
-  }
+  def s6_ann_pq(spark: SparkSession, dir: String): DataFrame =
+    recallEntry(spark, dir, PqMinRecall)(pqTopK)
 
   /** Invariant oracle for s6: the literal quality contract. */
   val s6_oracle: String =
@@ -638,26 +688,26 @@ object Similarity {
     *   1. coarse quantizer: s3's trained centroids (2 Lloyd rounds,
     *      O(centroids) driver state);
     *   2. residual encode: r = unit − centroid(cluster), PQ codebooks
-    *      trained per subspace ON RESIDUALS (the residual distribution
-    *      is what PQ must capture — encoding raw vectors would waste
-    *      codebook entropy re-describing the coarse cell);
+    *      trained per subspace ON RESIDUALS ([[trainPq]], 2 rounds — the
+    *      residual distribution is what PQ must capture; encoding raw
+    *      vectors would waste codebook entropy re-describing the coarse
+    *      cell);
     *   3. search: per (query, probed cluster) a 256-entry LUT over the
     *      query's RESIDUAL against that cell's centroid; approximate
     *      score = dot(q, centroid) + Σ_m LUT[m, code_m] — the ADC sum
     *      reconstructs dot(q, centroid + residual);
-    *   4. top-50 shortlist via the native bounded heap, exact rerank.
+    *   4. a corpus-scaled shortlist (≥ 200 per query) via the native
+    *      bounded heap, exact rerank.
     *
     * Like s3/s6, trained means are float-sum shuffle-order-dependent,
     * so the driver entry emits the recall INVARIANT vs the shared exact
     * baseline. [oracle: literal quality contract]
     */
-  private def ivfpqTopKFromUnit(unit: DataFrame): DataFrame = {
+  private[ops] def ivfpqTopK(unit: DataFrame): DataFrame = {
     val spark = unit.sparkSession
     import spark.implicits._
-    val nlist = 16; val nprobe = 4
-    val M = 16; val K = 16; val subDim = 4
 
-    val centroids = trainCoarseCentroids(unit, nlist, 2)
+    val centroids = trainCoarseCentroids(unit, Nlist, 2)
     val centDfCoarse = broadcast(centroids.zipWithIndex.toSeq.map { case (c, i) =>
       (i, c.toSeq)
     }.toDF("cluster", "centroid"))
@@ -673,63 +723,11 @@ object Similarity {
       .select(col("vec_id"), col("cluster"), col("resid"))
       .repartition(col("vec_id"))
       .persistTracked
-
-    val subvecs = assigned.select(col("vec_id"), col("cluster"),
-        explode(array((0 until M).map(s =>
-          struct(lit(s).as("sub"), slice(col("resid"), s * subDim + 1, subDim).as("subvec"))
-        ): _*)).as("sv"))
-      .select(col("vec_id"), col("cluster"), col("sv.sub").as("sub"),
-        col("sv.subvec").as("subvec"))
+    val subvecs = subvectors(assigned, "resid", Seq("vec_id", "cluster"), "subvec")
       .persistTracked
+    val (codebook, codes, corpusN) = trainPq(subvecs, rounds = 2, carry = Seq("cluster"))
 
-    def centDf(cent: Map[(Int, Int), Array[Double]]) =
-      broadcast(cent.toSeq.map { case ((s, c), v) =>
-        (s, c, v.toSeq, v.map(x => x * x).sum)
-      }.toDF("sub", "code", "cvec", "cnorm2"))
-
-    // cluster rides the aggregate (constant per vec_id, so first() is
-    // deterministic): the encode below reads it straight off `codes`
-    // instead of joining back to `assigned` (r15 — one join, two sorts
-    // and an aggregate input scan removed).
-    def assign(cents: DataFrame): DataFrame =
-      subvecs.join(cents, Seq("sub"))
-        .withColumn("score", dot(col("subvec"), col("cvec")) - col("cnorm2") * 0.5)
-        .groupBy("vec_id", "sub")
-        .agg(max_by(col("code"), struct(col("score"), -col("code"))).as("code"),
-          first(col("subvec")).as("subvec"), first(col("cluster")).as("cluster"))
-
-    // deterministic init: residual subvectors of docs 0..K-1
-    var cent: Map[(Int, Int), Array[Double]] = subvecs.filter(col("vec_id") < K)
-      .select("sub", "vec_id", "subvec").collect().map { r =>
-        (r.getAs[Int]("sub"), r.getAs[Long]("vec_id").toInt) ->
-          r.getSeq[Double](2).toArray
-      }.toMap
-    // corpus row count rides the (already collected) Lloyd means — one
-    // count() job fewer (same trick as s6: the (sub=0, dim=0) slice has
-    // one row per vec_id, so its group counts sum to |unit|)
-    var corpusN = 0L
-    for (_ <- 0 until 2) {
-      val means = assign(centDf(cent))
-        .select(col("sub"), col("code"), posexplode(col("subvec")).as(Seq("dim", "v")))
-        .groupBy("sub", "code", "dim").agg(avg("v").as("m"), count(lit(1)).as("cnt"))
-        .collect()
-      corpusN = means.filter(r =>
-        r.getAs[Int]("sub") == 0 && r.getAs[Int]("dim") == 0)
-        .map(_.getAs[Long]("cnt")).sum
-      val next = scala.collection.mutable.Map(cent.toSeq: _*)
-      means.groupBy(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"))).foreach {
-        case (key, rows) =>
-          val v = new Array[Double](subDim)
-          rows.foreach(r => v(r.getAs[Int]("dim")) = r.getAs[Double]("m"))
-          next(key) = v
-      }
-      cent = next.toMap
-    }
-
-    val codebook = centDf(cent)
-    val codes = assign(codebook).select("vec_id", "cluster", "sub", "code")
-
-    // query side: nprobe probed cells; per (query, cell) a 256-entry LUT
+    // query side: Nprobe probed cells; per (query, cell) a 256-entry LUT
     // (10 queries × 4 probes × 16 subs × 16 codes = 10 240 rows) plus
     // the constant dot(q, centroid) term. For INNER-PRODUCT scoring the
     // LUT pairs the QUERY's subvectors with the residual codewords:
@@ -740,18 +738,10 @@ object Similarity {
     // −dot(centroid, r̂) term that corrupts the ranking: measured
     // recall@5 at sf1 fell to 0.42; this formulation clears the
     // contract at every SF.)
-    val qprobe = unit.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit"))
-      .withColumn("probes", slice(sortCentroidsByScore(col("qunit"), centroids), 1, nprobe))
-      .select(col("query_id"), col("qunit"), explode(col("probes")).as("cluster"))
+    val qprobe = probedCells(unit, centroids)
       .join(centDfCoarse, Seq("cluster"))
       .withColumn("qbase", dot(col("qunit"), col("centroid")))
-    val lut = qprobe.select(col("query_id"), col("cluster"), col("qbase"),
-        explode(array((0 until M).map(s =>
-          struct(lit(s).as("sub"), slice(col("qunit"), s * subDim + 1, subDim).as("qsubvec"))
-        ): _*)).as("sv"))
-      .select(col("query_id"), col("cluster"), col("qbase"),
-        col("sv.sub").as("sub"), col("sv.qsubvec").as("qsubvec"))
+    val lut = subvectors(qprobe, "qunit", Seq("query_id", "cluster", "qbase"), "qsubvec")
       .join(codebook, Seq("sub"))
       .select(col("query_id"), col("cluster"), col("qbase"), col("sub"), col("code"),
         dot(col("qsubvec"), col("cvec")).as("partial"))
@@ -766,39 +756,20 @@ object Similarity {
     // the corpus: measured recall@5 = 0.8/0.92/1.0 at sf1/0.01/0.1 and
     // clears the 0.6 contract at sf10 (200k vectors), where a flat 200
     // measured 0.56. Rerank cost stays O(shortlist·|Q|) rows — driver
-    // state is one count, never vectors. (corpusN rides the
-    // already-collected Lloyd means — same exact count, no extra job.)
+    // state is one count, never vectors.
     val nShort = math.max(200L, corpusN / 250).toInt
     val adc = codes.join(broadcast(lut), Seq("cluster", "sub", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg((first(col("qbase")) + sum(col("partial"))).as("approx"))
-    val shortlist = graft.plans.TopKPerGroup
-      .topKPerGroup(adc, Seq("query_id"), Seq(("approx", false), ("vec_id", true)), nShort)
-
-    val rerank = shortlist
-      .join(unit, Seq("vec_id"))
-      .join(broadcast(unit.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("unit").as("qunit"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(rerank, 5)
+    rerank(adc, "approx", nShort, unit)
   }
-
-  /** The IVF-PQ top-5 result shape (for specs and direct use). */
-  def ivfpqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfpqTopKFromUnit(graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit")))
 
   /** s9's driver entry: the IVF-PQ pipeline's recall contract against
     * the shared exact baseline.
     */
-  def s9_ivfpq(spark: SparkSession, dir: String): DataFrame = {
-    val unit = graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit"))
-    recallContract(ivfpqTopKFromUnit(unit),
-      exactBaselinePairs(spark, dir), IvfPqMinRecall)
-  }
+  def s9_ivfpq(spark: SparkSession, dir: String): DataFrame =
+    recallEntry(spark, dir, IvfPqMinRecall)(ivfpqTopK)
 
   /** Invariant oracle for s9: the literal quality contract. */
   val s9_oracle: String =
@@ -842,11 +813,8 @@ object Similarity {
       .select(col("query_id"), col("doc_id").as("id"),
         col("kw_score").cast("double").as("score"))
     val unit = withUnit(Tables(spark, dir).embeddings)
-    val qv = broadcast(unit.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit")))
-    val scored = unit.join(qv, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cos"))
+    val scored = unit.join(broadcast(queryFrame(unit, nQ)), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), cosine("cos"))
     val vecTop = graft.plans.TopKPerGroup.topKPerGroup(
       scored, Seq("query_id"), Seq(("cos", false), ("vec_id", true)), 20)
       .select(col("query_id"), col("vec_id").as("id"), col("cos").as("score"))
@@ -1077,11 +1045,8 @@ object Similarity {
     * the rerank joins the ≤ shortlist·|Q| survivors back to the full
     * vectors — a broadcast-right join against one corpus scan. [oracle]
     */
-  def s10_ann_sq(spark: SparkSession, dir: String): DataFrame =
-    sqTopKFromUnit(graft.Caching.persist(
-      withUnit(Tables(spark, dir).embeddings).select("vec_id", "unit")))
-
-  private def sqTopKFromUnit(unit: DataFrame): DataFrame = {
+  def s10_ann_sq(spark: SparkSession, dir: String): DataFrame = {
+    val unit = unitFrame(spark, dir)
     // integer-valued double codes: products/sums stay exact in double,
     // and the native codegen'd dot expression scores them directly
     val codes = unit.select(col("vec_id"),
@@ -1091,16 +1056,7 @@ object Similarity {
     val scored = codes.join(qcodes, col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         dot(col("qcodes"), col("codes")).cast("long").as("qscore"))
-    val nShort = math.max(50L, unit.count() / 250).toInt
-    val shortlist = graft.plans.TopKPerGroup
-      .topKPerGroup(scored, Seq("query_id"), Seq(("qscore", false), ("vec_id", true)), nShort)
-    val rerank = shortlist
-      .join(unit, Seq("vec_id"))
-      .join(broadcast(unit.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("unit").as("qunit"))), Seq("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    topKPerQuery(rerank, 5)
+    rerank(scored, "qscore", math.max(50L, unit.count() / 250).toInt, unit)
   }
 
   /** DuckDB mirror of s10: same codes (round is away-from-zero on
@@ -1169,9 +1125,7 @@ object Similarity {
     import spark.implicits._
     val unit = withUnit(Tables(spark, dir).embeddings)
       .select(col("vec_id"), col("unit"))
-    val q = broadcast(unit.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit")))
-    val scored = unit.join(q, col("vec_id") =!= col("query_id"))
+    val scored = unit.join(broadcast(queryFrame(unit, 10)), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("cand_id"), col("unit"),
         round(dot(col("qunit"), col("unit")) * 1e6).cast("long").as("rel6"))
     val shortlist = graft.plans.TopKPerGroup
@@ -1300,11 +1254,7 @@ object Similarity {
   def s12_range_search(spark: SparkSession, dir: String): DataFrame = {
     val unit = withUnit(Tables(spark, dir).embeddings)
       .select(col("vec_id"), col("unit"))
-    val q = broadcast(unit.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("unit").as("qunit")))
-    unit.join(q, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
+    scoreNeighbors(unit.join(broadcast(queryFrame(unit, 10)), col("vec_id") =!= col("query_id")))
       .filter(col("cosine") >= RangeTau)
       .orderBy("query_id", "neighbor_id")
   }
@@ -1344,22 +1294,14 @@ object Similarity {
   def s13_filtered_ann(spark: SparkSession, dir: String): DataFrame = {
     val unit = withUnit(Tables(spark, dir).embeddings)
       .select(col("vec_id"), col("label"), col("unit"))
-    val q = broadcast(unit.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("unit").as("qunit")))
+    // the select keeps the broadcast side's (query_id, qlabel, qunit) order
+    val q = broadcast(queryFrame(unit, 10, col("label").as("qlabel"))
+      .select("query_id", "qlabel", "qunit"))
     val scored = unit.join(q,
         col("vec_id") =!= col("query_id") && col("label") === col("qlabel"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label").cast("long").as("label"),
-        round(dot(col("qunit"), col("unit")), 6).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    graft.plans.TopKPerGroup
-      .topKPerGroup(scored, Seq("query_id"),
-        Seq(("cosine", false), ("neighbor_id", true)), 5)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .orderBy("query_id", "rank")
+        col("label").cast("long").as("label"), cosine())
+    topKPerQuery(scored, 5)
   }
 
   /** DuckDB mirror of s13: same normalize→label-prefilter→dot→rank. */

@@ -73,7 +73,10 @@ class EmptyInputSpec extends SparkSpec {
       "t31_pii_redact", "s15_knn_join", "g7_degree_report",
       "a14_snapshot",
       // round-10 additions: token-budget selection, per-source cap
-      "p10_token_budget", "t32_domain_cap")
+      "p10_token_budget", "t32_domain_cap",
+      // trained and exact ANN indexes: IVF, k-NN vote, multi-probe, PQ,
+      // IVF-PQ (an empty corpus trains zero centroids)
+      "s3_ann_ivf", "s4_knn_label", "s5_ann_multiprobe", "s6_ann_pq", "s9_ivfpq")
     val failures = entries.flatMap { name =>
       try {
         SparkEntry.queries(name)(spark, emptyDir).collect()
@@ -92,6 +95,14 @@ class EmptyInputSpec extends SparkSpec {
     assert(p1.length == 5 && p1.forall(_.getAs[Long]("n_docs") == 0L))
     val q40 = graft.queries.Relational.q40_funnel(spark, emptyDir).collect()
     assert(q40.length <= 1)
+    // the recall contracts keep their one row: no queries, no k, and no
+    // recall to judge
+    Seq("s3_ann_ivf", "s6_ann_pq", "s9_ivfpq").foreach { name =>
+      val rows = SparkEntry.queries(name)(spark, emptyDir).collect()
+      assert(rows.length == 1, name)
+      assert(rows.head.getAs[Long]("n_queries") == 0L && rows.head.getAs[Long]("k") == 0L, name)
+      assert(rows.head.isNullAt(rows.head.fieldIndex("recall_ok")), name)
+    }
   }
 
   test("component labeling handles an empty edge list") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,30 +22,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
   /** Number of Spark jobs scheduled while `body` runs, on a cold data
-    * cache (listener bus is async — wait for the counter to go quiescent
-    * before reading it).
+    * cache ([[JobCounter]]).
     */
   protected def countJobs(body: => Unit): Int = {
     spark.catalog.clearCache()
-    val acc = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = acc.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val v = acc.get()
-        if (v == prev) stable += 1 else { stable = 0; prev = v }
-      }
-      acc.get()
-    } finally {
-      spark.sparkContext.removeSparkListener(l)
-      spark.catalog.clearCache()
-    }
+    try JobCounter.count(spark.sparkContext)(body)._2
+    finally spark.catalog.clearCache()
   }
 
   override def afterAll(): Unit = {

@@ -87,82 +87,6 @@ class GopherRulesSpec extends SparkSpec {
   }
 }
 
-class SimilaritySpec extends SparkSpec {
-
-  test("s1_ann_topk: 5 exact neighbors per query, cosine descending") {
-    val out = Similarity.s1_ann_topk(spark, sfDir).collect()
-    assert(out.length == 50) // 10 queries × 5
-    val byQ = out.groupBy(_.getAs[Long]("query_id"))
-    byQ.values.foreach { rows =>
-      val cos = rows.sortBy(_.getAs[Long]("rank")).map(_.getAs[Double]("cosine"))
-      assert(cos.zip(cos.tail).forall { case (a, b) => a >= b })
-    }
-  }
-
-  test("ivfTopK: probes nprobe lists, high overlap with exact top-k") {
-    val exact = Similarity.s1_ann_topk(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val ivf = Similarity.ivfTopK(spark, sfDir).collect()
-    assert(ivf.nonEmpty)
-    val pairs = ivf.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    // nprobe=4 of nlist=16 lists → expect substantial (not full) recall
-    assert(pairs.intersect(exact).size >= exact.size / 4,
-      s"IVF recall too low: ${pairs.intersect(exact).size}/${exact.size}")
-  }
-
-  test("s3_ann_ivf entry emits the satisfied recall contract") {
-    val row = Similarity.s3_ann_ivf(spark, sfDir).collect().head
-    assert(row.getAs[Long]("n_queries") == 10L)
-    assert(row.getAs[Long]("k") == 5L)
-    assert(row.getAs[Boolean]("recall_ok"), s"recall@5 below ${Similarity.IvfMinRecall}")
-  }
-
-  test("s6_ann_pq: PQ+rerank recall@5 clears the contract with margin") {
-    for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-                   "/root/testdata/sf0.1")) {
-      val exact = Similarity.s1_ann_topk(spark, sf).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      val pq = Similarity.pqTopK(spark, sf).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      val recall = pq.intersect(exact).size.toDouble / exact.size
-      info(s"$sf: PQ recall@5 = $recall")
-      assert(recall >= Similarity.PqMinRecall,
-        s"PQ+rerank recall@5 $recall below ${Similarity.PqMinRecall} at $sf")
-      val row = Similarity.s6_ann_pq(spark, sf).collect().head
-      assert(row.getAs[Long]("n_queries") == 10L)
-      assert(row.getAs[Long]("k") == 5L)
-      assert(row.getAs[Boolean]("recall_ok"))
-    }
-  }
-
-  test("s9_ivfpq: residual-PQ recall@5 clears the contract at every local SF") {
-    for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
-      val exact = Similarity.s1_ann_topk(spark, sf).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      val ivfpq = Similarity.ivfpqTopK(spark, sf).collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      val recall = ivfpq.intersect(exact).size.toDouble / exact.size
-      info(s"$sf: IVF-PQ recall@5 = $recall")
-      assert(recall >= Similarity.IvfPqMinRecall,
-        s"IVF-PQ recall@5 $recall below ${Similarity.IvfPqMinRecall} at $sf")
-      val row = Similarity.s9_ivfpq(spark, sf).collect().head
-      assert(row.getAs[Long]("n_queries") == 10L)
-      assert(row.getAs[Long]("k") == 5L)
-      assert(row.getAs[Boolean]("recall_ok"))
-    }
-  }
-
-  test("s2_ann_lsh returns bucket-local neighbors; nonzero overlap with exact") {
-    val exact = Similarity.s1_ann_topk(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    val approx = Similarity.s2_ann_lsh(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    assert(approx.nonEmpty)
-    // single-probe LSH: expect some—not full—overlap with the exact top-k
-    assert(approx.intersect(exact).nonEmpty)
-  }
-}
-
 class MultimodalSpec extends SparkSpec {
 
   test("m1 plumbing: typed schema, deterministic stub features, all docs flow through") {
