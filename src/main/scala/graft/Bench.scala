@@ -1,36 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver benchmark contract: run every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
+/** Timing output of [[Entries]]: run the selected entries (all by
+  * default) against SPARK_GRAFT_SF_DIR, print ONE JSON line with
+  * per-query seconds ([[stdoutLine]]; why it is compact: [[Entries]]).
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench [sel…]
   *
   * Each query gets one untimed warmup execution (JIT + codegen compile +
   * file-listing caches) and one timed execution — the timed pass is what
   * steady-state throughput looks like; cold-start compilation noise of
   * the first-touched query would otherwise dominate a ranking of
   * sub-second queries.
-  *
-  * Output discipline: the driver preserves only a bounded tail (~2 KB)
-  * of stdout, and the round-3 full-name line (~2.9 KB for 105 entries)
-  * lost its head to that window; by r13/r14 even the short-id 3-decimal
-  * full-envelope line (~2.1 KB for 175 entries) overflowed it again and
-  * the driver's parse was null two rounds running. The stdout line is
-  * therefore compact ([[stdoutLine]]): the metric/value/unit envelope the
-  * parser anchors on, short ids (the prefix before the first underscore,
-  * unique across the suite) at 2-decimal precision without trailing
-  * zeros, and at most [[StdoutBudget]] chars. Regression gating never
-  * reads the stdout line: the full-name 3-decimal line goes to
-  * target/bench_local.json for committed local snapshots, and
-  * scripts/bench_regress.py canonicalizes key shapes before comparing
-  * rounds.
   */
 object Bench {
-
-  /** Short id = text before the first '_' ("q17b_approx_countd" →
-    * "q17b"). Every SparkEntry name starts with a unique such prefix.
-    */
-  def shortId(name: String): String = name.takeWhile(_ != '_')
 
   /** Only a ~2000-char tail of stdout is kept for parsing, and sbt's
     * "[success] Total time ..." line (~75 chars) lands after ours.
@@ -74,7 +56,7 @@ object Bench {
   def stdoutLine(results: Results, sf: String): String = {
     val errors = results.count(_._2.isLeft)
     val t = compact(total(results), 3)
-    val full = envelope(t, Some(queriesJson(results, compact(_, 2), shortId)), sf, errors)
+    val full = envelope(t, Some(queriesJson(results, compact(_, 2), Entries.shortId)), sf, errors)
     if (full.length <= StdoutBudget) full else envelope(t, None, sf, errors)
   }
 
@@ -83,41 +65,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder("graft-bench", s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.init(spark)
-
-    // SPARK_GRAFT_BENCH_ONLY=d2,q35,s6 runs a subset (short or full ids) —
-    // for targeted scale spot-runs (e.g. sf10) where generating + timing
-    // the full suite would add nothing; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(s => s(name) || s(shortId(name))) }
-    require(ordered.map(p => shortId(p._1)).distinct.size == ordered.size,
-      "bench short ids must stay unique — rename the colliding entry")
+    val entries = Entries.select(args.toSeq)
+    val spark = Entries.session("graft-bench")
     // warmup pass (also primes parquet footer caches / broadcast
-    // relations). Drop the DATA cache after each warmup entry: what the
-    // warmup exists to prime (JIT, codegen, footer caches, broadcast
-    // codepaths) survives clearCache, while the persisted frames do NOT
-    // accumulate — 175 entries' worth of sf10 persists in one JVM OOMed
-    // the 16g driver during the r14 full-suite warmup (exit 52 at
-    // ~26 min) before a single entry was timed. Timed semantics are
-    // unchanged: the timed loop already clears between entries, so every
-    // timed run always started from a cold data cache.
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      spark.catalog.clearCache()
-    }
-    // Several operators persist intermediates; dropping the cache between
-    // queries keeps each timed run self-contained (its own persist cost
-    // included, no cross-query block-manager pressure skewing the tail of
-    // the alphabet).
-    spark.catalog.clearCache()
+    // relations). What the warmup exists to prime (JIT, codegen, footer
+    // caches, broadcast codepaths) survives the runner's per-entry
+    // clearCache, so every timed run starts from a cold DATA cache.
+    Entries.run(spark, sfDir, entries, "bench-warmup")((_, build) => build().count())
     // ContextCleaner reclaims broadcasts / shuffle files / checkpointed
     // RDDs only when the driver JVM actually GCs — with a large heap and
     // 106 back-to-back entries in one JVM that may never happen, and the
@@ -137,25 +91,17 @@ object Bench {
       System.gc()
       Thread.sleep(250)
     }
-    reclaim()
     // An entry that throws records "err", NOT its fail-fast latency: the
     // round-7 testdata regeneration broke 8 entries at analysis time and
     // the old swallow-and-time recorded 0.05 s "timings" a regression
     // gate would read as a 10x speedup. Errors make the run red (exit 1)
     // and bench_regress.py treats a present→err entry as fatal.
-    val results: Results =
-      ordered.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val r = try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          }
-        spark.catalog.clearCache()
-        reclaim()
-        name -> r
-      }
-    val errors = results.collect { case (n, Left(m)) => n -> m }
+    val results: Results = Entries.run(spark, sfDir, entries, "bench") { (_, build) =>
+      reclaim() // after the previous entry's clearCache
+      val t0 = System.nanoTime()
+      build().count()
+      (System.nanoTime() - t0) / 1e9
+    }
     val sf = sfDir.split('/').last
     // stop Spark BEFORE printing so no shutdown logging lands after the
     // JSON line and pushes its head out of the driver's tail window
@@ -165,10 +111,6 @@ object Bench {
     val w = new java.io.PrintWriter(out)
     try w.println(fileLine(results, sf)) finally w.close()
     println(stdoutLine(results, sf))
-    if (errors.nonEmpty) {
-      System.err.println(s"[bench] ${errors.size}/${results.size} entries FAILED: " +
-        errors.map(_._1).mkString(", "))
-      sys.exit(1)
-    }
+    Entries.exitIfFailed("bench", results)
   }
 }

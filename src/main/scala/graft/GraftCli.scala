@@ -36,7 +36,7 @@ object GraftCli {
     def flag(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(`name`, v) => v }
     val projectDir = flag("--project").getOrElse(".")
-    val spark = GraftSession.getOrCreate("graft-cli")
+    val spark = Entries.session("graft-cli")
     val code = execute(spark, cmd, projectDir,
       flag("--warehouse").getOrElse(s"$projectDir/wh"),
       args.contains("--fail-fast"), flag("--select"), flag("--data"))

@@ -47,13 +47,6 @@ object GraftSession {
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    init(spark)
-    spark
-  }
-
   /** Session-level extension surface (what `spark.sql.extensions=
     * graft.functions.GraftExtensions` gives a platform-built session):
     * the SQL function registry and the window-top-k auto-rewrite —

@@ -31,11 +31,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.builder("graft-scalegen", s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Entries.session("graft-scalegen")
 
     // events goes through Tables: its parquet carries ns-precision
     // timestamps Spark won't read raw; Tables truncates to micros, so the

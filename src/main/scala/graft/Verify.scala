@@ -1,69 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import scala.collection.immutable.ListMap
+
+/** Correctness output of [[Entries]]: each selected entry's result →
+  * `<outDir>/<name>/` parquet, plus `oracle_sql.json` and `errors.json`
+  * (entry → cause chain) for the DuckDB oracle compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [sel…]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: run only the named entries (local iteration;
-    // the driver always passes exactly two args and gets the full dump)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // GraftSession carries the engine's session contract — notably UTC and
-    // inferTimestampNTZ=false, without which tz-less parquet (the driver's
-    // pandas/arrow writer) surfaces as TIMESTAMP_NTZ and breaks event-time
-    // operators at analysis (the round-7 regression).
-    val spark = GraftSession.builder("graft-verify", s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.init(spark)
+    val entries = Entries.select(args.drop(2).toSeq)
+    val spark = Entries.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // A failed entry must be LOUD: round 7's silent skip left 8 broken
-    // entries simply absent from the driver's correctness artifact, and
-    // 117/117 green read as success until someone counted to 125. Every
-    // failure is collected into outDir/errors.json and the run exits
-    // nonzero (after dumping everything that does work).
-    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        // record the whole cause chain: wrapper exceptions (encoder,
-        // codegen) routinely hide the actionable root cause
-        val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-          .map(c => s"${c.getClass.getSimpleName}: ${String.valueOf(c.getMessage).take(300)}")
-          .mkString(" <- ")
-        System.err.println(s"[verify] $name FAILED: $chain")
-        failed(name) = chain.take(900)
-      }
+    val results = Entries.run(spark, sfDir, entries, "verify") { (name, build) =>
+      build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(
-        s"[verify] ${failed.size} entries FAILED: ${failed.keys.mkString(", ")}")
-      sys.exit(1)
-    }
+    Entries.writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
+    Entries.writeJson(s"$outDir/errors.json",
+      ListMap(results.collect { case (n, Left(chain)) => n -> chain.take(900) }: _*))
+    Entries.exitIfFailed("verify", results)
   }
 }

@@ -659,15 +659,6 @@ final class ModelEngine(spark: SparkSession) {
     }
     sb.toString
   }
-
-  /** Full project execution: load model/test dirs, run DAG, run tests. */
-  def runProject(project: Project, warehouse: String, failFast: Boolean = false): Seq[(String, Boolean)] = {
-    val models = project.models.flatMap(ModelParser.loadDir).flatMap(ModelParser.parseModelFile)
-    val tests = project.tests.flatMap(ModelParser.loadDir).flatMap(ModelParser.parseTestFile)
-    seed(loadSeeds(project.seeds), warehouse) // roots first: models may reference them
-    run(models, warehouse)
-    test(tests, failFast)
-  }
 }
 
 object ModelEngine {

@@ -28,7 +28,7 @@ class EntrySmokeSpec extends SparkSpec {
   }
 
   test("bench short ids stay unique across entries") {
-    val ids = SparkEntry.queries.keySet.map(Bench.shortId)
+    val ids = SparkEntry.queries.keySet.map(Entries.shortId)
     assert(ids.size == SparkEntry.queries.size,
       "two entries share a short id - the driver bench line would collide")
   }

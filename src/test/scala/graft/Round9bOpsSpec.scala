@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.{ModelEngine, Project}
+import graft.model.ModelEngine
 import graft.ops.{GraphOps, Multimodal, PipelineOps, Similarity}
 import graft.queries.Relational
 import org.apache.spark.sql.functions._
@@ -98,8 +98,9 @@ class Round9bOpsSpec extends SparkSpec {
     assert(sch("floor").dataType.typeName == "integer")
     assert(sch("is_gold").dataType.typeName == "boolean")
     assert(sch("tier").dataType.typeName == "string")
-    engine.runProject(
-      Project("seedproj", Seq(modelDir), Nil, Seq(seedDir)), tmpDir("graft_wh_"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "powersql.toml"),
+      "[project]\nname = \"seedproj\"\nmodels = [\"models\"]\nseeds = [\"seeds\"]\n".getBytes("UTF-8"))
+    assert(GraftCli.execute(spark, "run", root, tmpDir("graft_wh_"), failFast = false) == 0)
     val out = spark.table("tier_count").collect()
       .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
     assert(out == Map(false -> 1L, true -> 1L))

@@ -1,6 +1,6 @@
 package graft.model
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftCli, SparkSpec, Tables}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 class ModelParserSpec extends SparkSpec {
@@ -136,20 +136,26 @@ class ModelEngineSpec extends SparkSpec {
     assert(md.contains("| n | bigint |"))
   }
 
-  test("runProject wires config, models, tests end-to-end") {
+  test("GraftCli run + test wires config, models, tests end-to-end") {
     Tables(spark, sfDir).registerAll()
     val root = java.nio.file.Files.createTempDirectory("graft_proj_").toString
     val mdir = new java.io.File(s"$root/models"); mdir.mkdirs()
     val tdir = new java.io.File(s"$root/tests"); tdir.mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/powersql.toml"),
+      "[project]\nname = \"spec\"\nmodels = [\"models\"]\ntests = [\"tests\"]\n")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/models/m.sql"),
       "CREATE VIEW proj_v AS SELECT o_orderkey FROM orders")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/tests/t.sql"),
       "ASSERT (SELECT COUNT(*) FROM proj_v) > 0 AS 'view is non-empty'")
-    val project = Project("spec", Seq(s"$root/models"), Seq(s"$root/tests"))
-    val results = new ModelEngine(spark).runProject(project, s"$root/wh")
-    assert(results == Seq("view is non-empty" -> true))
+    assert(GraftCli.execute(spark, "run", root, s"$root/wh", failFast = false) == 0)
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(out)(
+      GraftCli.execute(spark, "test", root, s"$root/wh", failFast = false))
+    // one assertion, named by its message, that passed
+    assert(out.toString.linesIterator.toSeq == Seq("view is non-empty...OK"))
+    assert(code == 0)
   }
 
   test("columnLineage traces through CTEs, unions and window specs") {
