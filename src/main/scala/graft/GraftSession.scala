@@ -43,21 +43,29 @@ object GraftSession {
       // inputs (eventTime/Relational call sites) so they stay correct
       // even under a session that re-enables NTZ inference.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // Counts from parquet metadata come from graft.plans.FooterCount
+      // (registered by `init`), not spark.sql.parquet.aggregatePushdown:
+      // that setting only reaches DataSource V2 scans, and every graft
+      // parquet read is a V1 scan.
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
 
   /** Session-level extension surface (what `spark.sql.extensions=
     * graft.functions.GraftExtensions` gives a platform-built session):
-    * the SQL function registry and the window-top-k auto-rewrite —
+    * the SQL function registry, the window-top-k auto-rewrite —
     * DEFAULT-ON since round 11 (semantics proven by TopKPerGroupSpec;
     * gated by the QueryGen differential fuzz net, whose window queries
-    * keep running green through the rewrite). Idempotent; callers that
-    * build their own SparkSession should run this once after creation.
+    * keep running green through the rewrite) — and the parquet
+    * footer-count rule (parity proven by FooterCountSpec). Idempotent;
+    * callers that build their own SparkSession should run this once
+    * after creation.
     */
   def init(spark: SparkSession): Unit = {
     graft.functions.GraftFunctions.register(spark)
     graft.plans.TopKPerGroup.enableAutoRewrite(spark)
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.FooterCount))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.FooterCount
   }
 }
 

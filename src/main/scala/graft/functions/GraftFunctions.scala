@@ -81,15 +81,16 @@ object GraftFunctions {
 }
 
 /** `--conf spark.sql.extensions=graft.functions.GraftExtensions` —
-  * registers the SQL functions, the TopKPerGroup planner strategy, and
-  * the (semantics-preserving, proven by TopKPerGroupSpec) window-top-k
-  * rewrite in one shot, so a cluster session picks up the whole graft
-  * extension surface from config alone.
+  * registers the SQL functions, the TopKPerGroup planner strategy, the
+  * (semantics-preserving, proven by TopKPerGroupSpec) window-top-k
+  * rewrite and the parquet footer-count rule in one shot, so a cluster
+  * session picks up the whole graft extension surface from config alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
     ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
+    ext.injectOptimizerRule(_ => graft.plans.FooterCount)
   }
 }

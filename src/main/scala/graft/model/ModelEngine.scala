@@ -473,14 +473,16 @@ final class ModelEngine(spark: SparkSession) {
     * src/main.rs:436-452), returning (message, passed) pairs.
     *
     * Without `failFast`, all conditions are evaluated as ONE single-row
-    * plan (`SELECT (c1) AS t0, (c2) AS t1, …`): Catalyst runs the scalar
-    * subqueries of the batch concurrently, so N data tests cost one
-    * driver round-trip instead of N sequential jobs — on a 100 TB
-    * warehouse with dozens of asserts that is the difference between
-    * minutes and one pass. `failFast` keeps the reference's sequential
-    * first-failure semantics; if the batched plan fails to build (e.g. a
-    * missing table), fall back to sequential so the error attributes to
-    * the specific test.
+    * plan (`SELECT (c1) AS t0, (c2) AS t1, …`): one driver round-trip
+    * and one job for the row, with the scalar subqueries run
+    * concurrently. Each subquery that scans data still costs its own
+    * jobs, two AQE jobs for an aggregate: 35 row-count ASSERTs measured
+    * 74 jobs. A whole-table `(SELECT COUNT(*) FROM t)` over a parquet
+    * table model or source now costs none, since graft.plans.FooterCount
+    * answers it from the file footers. `failFast` keeps the reference's
+    * sequential first-failure semantics; if the batched plan fails to
+    * build (e.g. a missing table), fall back to sequential so the error
+    * attributes to the specific test.
     */
   def test(tests: Seq[AssertTest], failFast: Boolean = false): Seq[(String, Boolean)] = {
     if (!failFast && tests.size > 1) {

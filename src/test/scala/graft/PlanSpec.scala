@@ -716,4 +716,20 @@ class PlanSpec extends SparkSpec {
       s"no join keyed by vec_id:\n${vecIdJoinKeys.mkString("\n")}")
     df.sparkSession.sharedState.cacheManager.clearCache()
   }
+
+  test("PlanDump counts a plan's exchanges the same before and after it runs") {
+    // a cached aggregate under a join: an executed plan nests AQE final
+    // and initial plans, and only the initial ones count
+    val agg = spark.range(0, 2000, 1, 4).groupBy((col("id") % 7).as("k")).count().persist()
+    try {
+      val df = spark.range(0, 2000, 1, 4).withColumn("k", col("id") % 7)
+        .join(agg, "k").groupBy("k").agg(sum("id").as("s"))
+      val before = formatted(df)
+      df.queryExecution.toRdd.foreach(_ => ())
+      val after = formatted(df)
+      assert(!before.contains("== Final Plan ==") && after.contains("== Final Plan =="))
+      assert(PlanDump.plannedExchanges(before) == nodeCount(before, "Exchange"))
+      assert(PlanDump.plannedExchanges(after) == PlanDump.plannedExchanges(before), after)
+    } finally agg.unpersist()
+  }
 }

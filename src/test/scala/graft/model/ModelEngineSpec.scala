@@ -125,6 +125,25 @@ class ModelEngineSpec extends SparkSpec {
     assert(ff == Seq("fail" -> false))
   }
 
+  test("row-count ASSERTs over table models run no Spark job of their own") {
+    Tables(spark, sfDir).registerAll()
+    val wh = java.nio.file.Files.createTempDirectory("graft_spec_counts_").toString
+    val models = ModelParser.parseModelFile(
+      """CREATE TABLE rc_orders AS SELECT o_orderkey, o_custkey FROM orders;
+        |CREATE TABLE rc_custs AS SELECT o_custkey, COUNT(*) AS n FROM rc_orders GROUP BY o_custkey""".stripMargin)
+    engine.run(models, wh)
+    val asserts = models.map { m =>
+      val rows = spark.table(m.name).rdd.count()
+      AssertTest(s"(SELECT COUNT(*) FROM ${m.name}) = $rows", s"${m.name} has $rows rows")
+    }
+    // the batch's one-row SELECT is the only job: two per ASSERT before
+    // FooterCount answered the counts from the footers
+    var results = Seq.empty[(String, Boolean)]
+    val jobs = countJobs { results = engine.test(asserts) }
+    assert(results.map(_._2) == Seq(true, true), results)
+    assert(jobs <= 1, s"engine.test scheduled $jobs jobs")
+  }
+
   test("docs emits mermaid DAG + schema tables") {
     Tables(spark, sfDir).registerAll()
     val models = Seq(
