@@ -78,6 +78,12 @@ object HashExpressions {
   def bigramCounts(tokens: Column): Column =
     ExpressionUtils.column(BigramCounts(ExpressionUtils.expression(tokens)))
 
+  /** string text → array<string> of its distinct 2-word shingles in
+    * first-occurrence order, in one generated loop ([[Shingles]]).
+    */
+  def shingles(text: Column): Column =
+    ExpressionUtils.column(Shingles(ExpressionUtils.expression(text)))
+
   /** array<float|double> → L2-normalized array<double> in one generated
     * two-pass loop (sum of squares, then divide). Replaces the
     * cast-transform + aggregate + divide-transform HOF chain, which the
@@ -578,5 +584,88 @@ case class BigramCounts(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.GraftBigrams.bigramCounts($c)")
 
   override protected def withNewChildInternal(newChild: Expression): BigramCounts =
+    copy(child = newChild)
+}
+
+/** Loop helper behind [[Shingles]] (shared by eval and codegen). */
+object GraftShingles {
+  private val Space = UTF8String.fromString(" ")
+  private val SpaceByte = ' '.toByte
+
+  /** The distinct 2-word shingles of `text` in first-occurrence order:
+    * tokens are the non-empty runs between ' ' characters (a space byte
+    * never occurs inside a multi-byte UTF-8 character), each shingle is
+    * two adjacent tokens joined by ' '. Under 2 tokens the one shingle is
+    * the tokens joined by ' ' (`""` for none), and null text has no
+    * tokens.
+    */
+  def bigrams(text: UTF8String): ArrayData = {
+    val toks = new java.util.ArrayList[UTF8String]()
+    if (text != null) {
+      val b = text.getBytes
+      var start = 0
+      var i = 0
+      while (i <= b.length) {
+        if (i == b.length || b(i) == SpaceByte) {
+          if (i > start) toks.add(UTF8String.fromBytes(b, start, i - start))
+          start = i + 1
+        }
+        i += 1
+      }
+    }
+    if (toks.size < 2) {
+      val one = if (toks.isEmpty) UTF8String.EMPTY_UTF8 else toks.get(0)
+      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](one))
+    }
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    var j = 0
+    while (j < toks.size - 1) {
+      seen.add(UTF8String.concat(toks.get(j), Space, toks.get(j + 1)))
+      j += 1
+    }
+    val out = new Array[Any](seen.size)
+    val it = seen.iterator()
+    j = 0
+    while (it.hasNext) { out(j) = it.next(); j += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+}
+
+/** text → distinct 2-word shingles (the dedup family's document
+  * representation, [[GraftShingles.bigrams]]) in one generated loop.
+  * Equals `array_distinct(CASE WHEN size(toks) >= 2 THEN transform(
+  * sequence(0, size(toks) - 2), i -> concat_ws(' ', toks[i], toks[i+1]))
+  * ELSE array(concat_ws(' ', toks)) END)` over `toks = filter(split(text,
+  * ' '), x -> x != '')`, null text included (`[""]`: `size(null)` is
+  * null, so that form takes the ELSE branch), without the interpreted
+  * lambdas that keep the scan stage out of whole-stage codegen.
+  */
+case class Shingles(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def nullable: Boolean = false
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"shingles requires string, got ${other.simpleString}")
+    }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    GraftShingles.bigrams(child.eval(input).asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} =
+      |  graft.functions.GraftShingles.bigrams(${c.isNull} ? null : ${c.value});
+      """.stripMargin,
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Shingles =
     copy(child = newChild)
 }

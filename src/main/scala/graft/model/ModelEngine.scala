@@ -479,7 +479,9 @@ final class ModelEngine(spark: SparkSession) {
     * jobs, two AQE jobs for an aggregate: 35 row-count ASSERTs measured
     * 74 jobs. A whole-table `(SELECT COUNT(*) FROM t)` over a parquet
     * table model or source now costs none, since graft.plans.FooterCount
-    * answers it from the file footers. `failFast` keeps the reference's
+    * answers it from the file footers and folds it into a literal; when
+    * every condition folds, the row itself is a local relation and the
+    * call runs no job at all. `failFast` keeps the reference's
     * sequential first-failure semantics; if the batched plan fails to
     * build (e.g. a missing table), fall back to sequential so the error
     * attributes to the specific test.

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Caching.PersistSyntax
 
@@ -20,15 +20,14 @@ import graft.Caching.PersistSyntax
 object Dedup {
 
   /** Distinct 2-word shingle set per document (falls back to the whole
-    * text when shorter than the shingle width).
+    * text when shorter than the shingle width), from the native
+    * [[graft.functions.Shingles]] loop; `toks` stays for d14's token
+    * counts and is pruned wherever nothing reads it.
     */
   private def withShingles(docs: DataFrame): DataFrame =
     docs
       .withColumn("toks", expr(TextOps.TOKENS))
-      .withColumn("shingles", expr(
-        """array_distinct(CASE WHEN size(toks) >= 2 THEN
-          |  transform(sequence(0, size(toks) - 2), i -> concat_ws(' ', toks[i], toks[i+1]))
-          |ELSE array(concat_ws(' ', toks)) END)""".stripMargin))
+      .withColumn("shingles", graft.functions.HashExpressions.shingles(col("text")))
 
   /** Posting-list df cap, scaled to corpus size: fixed 20 up to 5 000
     * docs (the original driver-SF contract, byte-identical there), then
@@ -154,7 +153,7 @@ object Dedup {
 
   /** Exact shingle-Jaccard verify (integer intersection / (|A|+|B|-inter),
     * rounded once — the oracles' arithmetic): the candidate pairs scoring
-    * ≥ `minJaccard`, best first.
+    * ≥ `minJaccard`, unordered ([[bestFirst]] is the entries' order).
     */
   private def jaccardPairs(cands: DataFrame, sh: DataFrame, minJaccard: Double): DataFrame =
     withInter(cands, sh)
@@ -162,7 +161,10 @@ object Dedup {
         round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4))
       .filter(col("jaccard") >= minJaccard)
       .select("id_a", "id_b", "jaccard")
-      .orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
+
+  /** d2/d4's output order: highest Jaccard first, then the pair ids. */
+  private def bestFirst(pairs: DataFrame): DataFrame =
+    pairs.orderBy(col("jaccard").desc, col("id_a").asc, col("id_b").asc)
 
   /** d2_dedup_minhash — MinHash(64) + LSH(16 bands × 4 rows) near-dup
     * pairs, verified with exact shingle Jaccard ≥ 0.7.
@@ -190,7 +192,8 @@ object Dedup {
     val sig = sh.withColumn("sig",
       graft.functions.HashExpressions.shaMinHash(col("shingles"), K))
       .select("doc_id", "sig")
-    jaccardPairs(bucketPairs(shaBands(sig).persistTracked, Seq("band", "bkey"), 100, 0), sh, 0.7)
+    bestFirst(jaccardPairs(
+      bucketPairs(shaBands(sig).persistTracked, Seq("band", "bkey"), 100, 0), sh, 0.7))
   }
 
   /** DuckDB mirror of d2 — same sha-based signatures, bands, df guard,
@@ -341,7 +344,14 @@ object Dedup {
     * shingle keys whose fan-out the df cap bounds, one verify join.
     * [oracle]
     */
-  def d4_ngram_jaccard(spark: SparkSession, dir: String): DataFrame = {
+  def d4_ngram_jaccard(spark: SparkSession, dir: String): DataFrame =
+    bestFirst(d4Pairs(spark, dir))
+
+  /** d4's verified pairs (id_a, id_b, jaccard) in no particular order:
+    * what d6 labels, without the range-partitioned sort only d4's output
+    * contract reads.
+    */
+  private def d4Pairs(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir).documents
     val cap = dfCap(docs.count())
     val sh = withShingles(docs)
@@ -486,79 +496,127 @@ object Dedup {
       |SELECT id_a, id_b, edit_dist FROM v WHERE edit_dist <= 40
       |ORDER BY edit_dist ASC, id_a ASC, id_b ASC""".stripMargin
 
-  /** Result of min-label propagation: per-node labels plus an explicit
+  /** Result of component labeling: per-node labels plus an explicit
     * convergence signal — a caller must be able to TELL that a wide
-    * component hit the round cap (and e.g. rerun with more rounds or a
-    * large-star/small-star pass) instead of silently keeping wrong labels.
+    * component hit the round cap instead of silently keeping wrong labels.
     */
   final case class ClusterResult(labels: DataFrame, converged: Boolean, rounds: Int)
 
-  /** Iterative min-label propagation over an undirected pair list
-    * (`id_a`, `id_b`). Each round is one join + groupBy over the edge
-    * list, checkpointed eagerly to truncate lineage — without that the
-    * plan tree doubles per iteration and analysis itself blows up.
-    * `checkpointDir` selects reliable `checkpoint` (survives executor
-    * loss — what a real cluster run wants) over `localCheckpoint`
-    * (executor-local blocks; fine single-node). Stops as soon as a round
-    * changes no label and reports (converged, rounds) either way.
+  /** Most nodes one partition's union-find seed holds before it emits its
+    * forest and starts over: 2^18 ids, a few MB per task.
     */
-  def clusterLabels(
+  private val SeedNodes = 1 << 18
+
+  /** Connected components of the undirected pair graph (`id_a`, `id_b`):
+    * every node of a pair is labeled with the smallest id of its
+    * component. The dedup family's one component labeler: d6 runs it on
+    * text pairs, d8 on embedding pairs.
+    *
+    *  1. Seed. A union-find over each partition's pairs ([[seedRoots]]:
+    *     narrow, no shuffle) gives every node it sees the smallest id
+    *     joined to it there; a node's initial label is the minimum over
+    *     the partitions it appears in (one groupBy). Each seed label is
+    *     an id in the node's own component and ≤ the node, so min-label
+    *     propagation still converges to the component minimum, and a
+    *     component whose edges share a partition starts out labeled.
+    *  2. Rounds. Min-label propagation: one join + groupBy over the edge
+    *     list per round, snapshotted eagerly (`localCheckpoint`, or
+    *     reliable `checkpoint` into `checkpointDir` on a cluster) to cut
+    *     lineage — without that the plan tree doubles per round. The
+    *     changed labels are counted by an `Observation` on that same
+    *     snapshot job, and the loop stops at a round that changes none.
+    *  3. Cap. After `maxRounds` rounds one probe round tells labels that
+    *     settled exactly at the cap from a component wider than the cap.
+    *     The latter escalates to [[starContraction]], whose round count
+    *     is O(log² n) in the component size, not its diameter.
+    */
+  def components(
       pairs: DataFrame, maxRounds: Int = 12,
       checkpointDir: Option[String] = None): ClusterResult = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def snapshot(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
-    val p = pairs.select("id_a", "id_b")
-      .persistTracked
+    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
+    val p = pairs.select("id_a", "id_b").persistTracked
+    val lp = propagate(p, maxRounds, checkpointDir)
+    if (lp.converged) lp else starContraction(p, checkpointDir)
+  }
+
+  private def snapshot(df: DataFrame, checkpointDir: Option[String]): DataFrame =
+    if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+
+  /** Steps 1–3 of [[components]] without the escalation. */
+  private[graft] def propagate(
+      p: DataFrame, maxRounds: Int, checkpointDir: Option[String]): ClusterResult = {
+    import p.sparkSession.implicits._
     val edges = p.unionAll(p.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .persistTracked
-    var labels = p.select(col("id_a").as("doc_id"))
-      .unionAll(p.select(col("id_b").as("doc_id")))
-      .distinct()
-      .withColumn("label", col("doc_id"))
-    labels = snapshot(labels)
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    // (doc_id, old_label, label) after one more propagation round
+    def step(labels: DataFrame): DataFrame = {
       val msgs = edges
         .join(labels, edges("id_a") === labels("doc_id"))
         .select(col("id_b").as("doc_id"), col("label"))
-      val next = snapshot(
-        labels.select(col("doc_id"), col("label").as("old_label"))
-          .join(
-            labels.select("doc_id", "label").unionAll(msgs)
-              .groupBy("doc_id").agg(min("label").as("label")),
-            Seq("doc_id")))
-      converged = next.filter(col("label") =!= col("old_label")).isEmpty
-      labels = next.select("doc_id", "label")
+      labels.select(col("doc_id"), col("label").as("old_label"))
+        .join(labels.unionAll(msgs).groupBy("doc_id").agg(min("label").as("label")),
+          Seq("doc_id"))
+    }
+    var labels = snapshot(p.as[(Long, Long)].mapPartitions(seedRoots).toDF("doc_id", "root")
+      .groupBy("doc_id").agg(min("root").as("label")), checkpointDir)
+    var round = 0
+    var converged = false
+    while (round < maxRounds && !converged) {
+      val changed = Observation()
+      labels = snapshot(step(labels)
+        .observe(changed, count(when(col("label") =!= col("old_label"), 1)).as("n"))
+        .select("doc_id", "label"), checkpointDir)
+      converged = changed.get("n") == 0L
       round += 1
     }
     // the cap fired mid-propagation: one more probe round decides whether
     // labels were actually stable (converged exactly at the cap) or not
-    if (!converged) {
-      val msgs = edges
-        .join(labels, edges("id_a") === labels("doc_id"))
-        .select(col("id_b").as("doc_id"), col("label"))
-      val better = labels.select("doc_id", "label").unionAll(msgs)
-        .groupBy("doc_id").agg(min("label").as("min_label"))
-        .join(labels, Seq("doc_id"))
-        .filter(col("min_label") =!= col("label"))
-      converged = better.isEmpty
-    }
+    if (!converged) converged = step(labels).filter(col("label") =!= col("old_label")).isEmpty
     ClusterResult(labels, converged, round)
   }
 
-  /** Connected components by the alternating large-star / small-star
-    * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", ACM SoCC 2014 — public): round count is O(log² n) in the
-    * component size, NOT its diameter, so a 100 TB run with one
-    * pathological million-hop chain converges in ~20 rounds where
-    * min-label propagation would need a million. Each round is two star
-    * steps; each step is one groupBy + one join on the SAME key, so the
-    * join reuses the aggregation's hash partitioning (no extra
-    * exchange). Output contract is identical to [[clusterLabels]]:
-    * every node labeled with the minimum node id of its component.
+  /** Step 1 of [[components]] over one partition's pairs: (node, root)
+    * for every node seen, root the smallest id the partition's edges join
+    * it to. Union always hangs the larger root under the smaller, so a
+    * root is its set's minimum. A table that reaches [[SeedNodes]] nodes
+    * emits its forest and starts over, so a task holds bounded state and
+    * never buffers its partition.
+    */
+  private def seedRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] =
+    new Iterator[Iterator[(Long, Long)]] {
+      def hasNext: Boolean = edges.hasNext
+      def next(): Iterator[(Long, Long)] = {
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = { // path halving
+          var n = x
+          var up = parent.getOrElseUpdate(n, n)
+          while (up != n) {
+            val grand = parent(up)
+            parent(n) = grand
+            n = grand
+            up = parent(n)
+          }
+          n
+        }
+        while (edges.hasNext && parent.size <= SeedNodes - 2) {
+          val (a, b) = edges.next()
+          val (ra, rb) = (find(a), find(b))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        parent.keys.toArray.iterator.map(n => (n, find(n)))
+      }
+    }.flatten
+
+  /** [[components]]' escalation: connected components by the alternating
+    * large-star / small-star algorithm (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", ACM SoCC 2014 — public): round
+    * count is O(log² n) in the component size, NOT its diameter, so a
+    * 100 TB run with one pathological million-hop chain converges in ~20
+    * rounds where min-label propagation would need a million. Each round
+    * is two star steps; each step is one groupBy + one join on the SAME
+    * key, so the join reuses the aggregation's hash partitioning (no
+    * extra exchange). Same labels as [[components]]: every node gets the
+    * minimum node id of its component.
     *
     *  - large-star: per node u with m = min({u} ∪ N(u)), reattach every
     *    strictly-larger neighbor v > u to m — tall trees flatten.
@@ -566,16 +624,10 @@ object Dedup {
     *    m = min(parents), reattach u and its other parents to m.
     *
     * Fixpoint (a star per component) is detected as an unchanged edge
-    * set; `snapshot` (localCheckpoint, or reliable `checkpoint(dir)` on
-    * a cluster) truncates lineage each round like clusterLabels.
+    * set; each round is snapshotted like a propagation round.
     */
-  def clusterLabelsStar(
-      pairs: DataFrame, maxRounds: Int = 20,
-      checkpointDir: Option[String] = None): ClusterResult = {
-    val spark = pairs.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def snapshot(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+  private[graft] def starContraction(
+      pairs: DataFrame, checkpointDir: Option[String], maxRounds: Int = 20): ClusterResult = {
     val nodes = pairs.select(col("id_a").as("doc_id"))
       .unionAll(pairs.select(col("id_b").as("doc_id")))
       .distinct()
@@ -584,7 +636,7 @@ object Dedup {
     var edges = snapshot(pairs
       .select(greatest(col("id_a"), col("id_b")).as("child"),
         least(col("id_a"), col("id_b")).as("parent"))
-      .filter(col("child") =!= col("parent")).distinct())
+      .filter(col("child") =!= col("parent")).distinct(), checkpointDir)
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -599,7 +651,7 @@ object Dedup {
       val small = snapshot(large.join(cMin, "child")
         .select(col("parent").as("child"), col("m").as("parent"))
         .unionAll(cMin.select(col("child"), col("m").as("parent")))
-        .filter(col("child") =!= col("parent")).distinct())
+        .filter(col("child") =!= col("parent")).distinct(), checkpointDir)
       converged = small.unionAll(edges)
         .groupBy("child", "parent").agg(count(lit(1)).as("n"))
         .filter(col("n") =!= 2).isEmpty
@@ -616,45 +668,28 @@ object Dedup {
     ClusterResult(labels, converged, round)
   }
 
-  /** Adaptive components: min-label propagation first (cheapest per
-    * round — near-dup components are overwhelmingly shallow cliques, so
-    * it converges in 2-3 rounds), escalating to star contraction ONLY if
-    * the diameter cap fires. The escalation is what makes the cap safe:
-    * a pathological wide component costs one abandoned propagation phase
-    * and then O(log² n) star rounds, instead of either wrong labels or
-    * an unbounded round count.
-    */
-  def clusterLabelsAuto(
-      pairs: DataFrame, propRounds: Int = 12,
-      checkpointDir: Option[String] = None): ClusterResult = {
-    val lp = clusterLabels(pairs, propRounds, checkpointDir)
-    if (lp.converged) lp else clusterLabelsStar(pairs, checkpointDir = checkpointDir)
-  }
-
   /** d6_dedup_clusters — connected components over the verified near-dup
-    * pair graph, by iterative min-label propagation
-    * ([[clusterLabelsAuto]]): every document gets a cluster_id (the
+    * pair graph ([[components]]): every document gets a cluster_id (the
     * smallest doc_id reachable through near-dup edges) and `keep` marks
     * the cluster representative. This is the step that turns pairwise
     * similarity into an actual dedup decision.
     *
-    * The edge list is d4's exact-Jaccard pairs (>= 0.5) — deterministic,
-    * so the whole operator is oracle-checked against a recursive-CTE
-    * transitive closure in DuckDB. Swapping in d2's LSH pairs gives the
-    * identical propagation at 100 TB scale.
+    * The edge list is d4's exact-Jaccard pairs (>= 0.5), taken before
+    * d4's output sort, which nothing here reads. The pairs are
+    * deterministic, so the whole operator is oracle-checked against a
+    * recursive-CTE transitive closure in DuckDB. Swapping in d2's LSH
+    * pairs gives the identical labeling at 100 TB scale.
     *
-    * Scale: near-dup components are overwhelmingly tiny cliques
-    * (diameter ≤ a few hops). Each round is one join + groupBy over the
-    * edge list, localCheckpoint'd (eager) to truncate lineage — without
-    * that the plan tree doubles per iteration and analysis itself blows
-    * up (on a cluster prefer reliable checkpoint(dir) so rounds survive
-    * executor loss). Propagation stops as soon as a round changes no
-    * label (the convergence count rides the same job); a component wider
-    * than 12 hops makes [[clusterLabelsAuto]] escalate to large-star /
-    * small-star contraction. [oracle]
+    * Scale: near-dup components are overwhelmingly small cliques, which
+    * the per-partition union-find seed mostly labels before the first
+    * round. Each min-label round is one checkpointed join + groupBy over
+    * the edge list whose job also counts the changed labels, so a pair
+    * graph already labeled by the seed costs one round. A component wider
+    * than 12 hops escalates to large-star / small-star contraction.
+    * [oracle]
     */
   def d6_dedup_clusters(spark: SparkSession, dir: String): DataFrame = {
-    val result = clusterLabelsAuto(d4_ngram_jaccard(spark, dir).select("id_a", "id_b"))
+    val result = components(d4Pairs(spark, dir).select("id_a", "id_b"))
     require(result.converged,
       s"component labeling did not converge in ${result.rounds} rounds " +
         "even after star-contraction escalation — raise maxRounds")
@@ -743,7 +778,7 @@ object Dedup {
 
   /** d8_embed_clusters — SEMANTIC dedup clusters: connected components
     * over d5's embedding near-dup pair graph, exactly as d6 clusters
-    * d4's text pairs. The same [[clusterLabelsAuto]] engine serves both
+    * d4's text pairs. The same [[components]] kernel serves both
     * modalities — one component labeler, two candidate generators —
     * which is the architectural point: near-dup semantics live in the
     * pair generators, transitive-closure mechanics are shared. Oracle =
@@ -751,7 +786,7 @@ object Dedup {
     * proof, like p1/t13). [oracle]
     */
   def d8_embed_clusters(spark: SparkSession, dir: String): DataFrame = {
-    val result = clusterLabelsAuto(d5_embed_dup(spark, dir).select("id_a", "id_b"))
+    val result = components(d5_embed_dup(spark, dir).select("id_a", "id_b"))
     require(result.converged,
       s"embedding component labeling did not converge in ${result.rounds} rounds")
     result.labels

@@ -49,6 +49,15 @@ object GraphOps {
     ed.select(col("src"), col("dst"), col("w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
+  /** The heavy-lane cut of g2–g6: the exact 75th percentile of the lane
+    * weights `w` (one row, O(1) driver state), or `Double.MaxValue` — no
+    * heavy lane — when the graph has no edges and the percentile is null.
+    */
+  private def heavyCut(ew: DataFrame): Double = {
+    val thr = ew.agg(expr("percentile(w, 0.75)").as("thr")).first()
+    if (thr.isNullAt(0)) Double.MaxValue else thr.getDouble(0)
+  }
+
   private def collectNations(t: Tables): Array[Long] =
     t.nation.select(col("n_nationkey").cast("long")).collect()
       .map(_.getLong(0)).sorted
@@ -107,7 +116,7 @@ object GraphOps {
     // 1/4, exactly representable), so both engines keep the same edges
     // at EVERY scale factor and the entry is never empty. The 1-row
     // collect is O(1) driver state, same class as the bloom literal.
-    val thr = ed.agg(expr("percentile(w, 0.75)").as("thr")).first().getDouble(0)
+    val thr = heavyCut(ed)
     val und = ed.filter(col("w") >= thr)
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -177,7 +186,7 @@ object GraphOps {
     import spark.implicits._
     val t = Tables(spark, dir)
     val ew = tradeEdges(t).localCheckpoint(true)
-    val thr = ew.agg(expr("percentile(w, 0.75)").as("thr")).first().getDouble(0)
+    val thr = heavyCut(ew)
     // heavy-lane cut runs distributed; the bounded relaxation then runs
     // driver-side on the collected contracted graph (g1's fast path)
     val edges = collectEdges(ew.filter(col("w") >= thr)
@@ -245,7 +254,7 @@ object GraphOps {
     * the one contracted-edge aggregation (distributed); the recurrence
     * runs driver-side on the collected ≤25-node graph. (Corpus-scale
     * component labeling — millions of nodes, unbounded diameter — is
-    * d6's star-contraction labeler; this is the contracted-graph
+    * d6's `Dedup.components` kernel; this is the contracted-graph
     * variant where bounded label-prop is both sufficient and exactly
     * mirrorable.) [oracle: recursive CTE]
     */
@@ -253,8 +262,7 @@ object GraphOps {
     import spark.implicits._
     val t = Tables(spark, dir)
     val ew = tradeEdges(t).localCheckpoint(true)
-    val thrRow = ew.agg(expr("percentile(w, 0.75)").as("thr")).first()
-    val thr = if (thrRow.isNullAt(0)) Double.MaxValue else thrRow.getDouble(0)
+    val thr = heavyCut(ew)
     // heavy-lane cut runs distributed; the 24-round min-label
     // recurrence then runs driver-side on the collected contracted
     // graph (g1's fast path — was 24 scheduled join+agg rounds)
@@ -365,8 +373,7 @@ object GraphOps {
     import spark.implicits._
     val t = Tables(spark, dir)
     val ew = tradeEdges(t).localCheckpoint(true)
-    val thrRow = ew.agg(expr("percentile(w, 0.75)").as("thr")).first()
-    val thr = if (thrRow.isNullAt(0)) Double.MaxValue else thrRow.getDouble(0)
+    val thr = heavyCut(ew)
     val heavy = ew.filter(col("w") >= thr).filter(col("src") =!= col("dst"))
     val und = heavy.select(col("src"), col("dst"), col("w"))
       .union(heavy.select(col("dst").as("src"), col("src").as("dst"), col("w")))
@@ -444,8 +451,7 @@ object GraphOps {
     import spark.implicits._
     val t = Tables(spark, dir)
     val ew = tradeEdges(t).localCheckpoint(true)
-    val thrRow = ew.agg(expr("percentile(w, 0.75)").as("thr")).first()
-    val thr = if (thrRow.isNullAt(0)) Double.MaxValue else thrRow.getDouble(0)
+    val thr = heavyCut(ew)
     val heavy = ew.filter(col("w") >= thr).filter(col("src") =!= col("dst"))
     val und = heavy.select(col("src"), col("dst"), col("w"))
       .union(heavy.select(col("dst").as("src"), col("src").as("dst"), col("w")))

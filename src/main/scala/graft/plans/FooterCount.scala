@@ -1,10 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, NamedExpression, ScalarSubquery}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, OneRowRelation, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.SCALAR_SUBQUERY
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFileFormat}
 import org.apache.spark.sql.internal.SQLConf
@@ -23,7 +24,13 @@ import scala.util.control.NonFatal
   * any `Filter`, `Sample`, `Limit`, join, cached or streaming relation in
   * between leaves the plan alone — and replaces it with a one-row
   * `LocalRelation`. It runs inside `OptimizeSubqueries` too, so a scalar
-  * `(SELECT COUNT(*) FROM t)` in a model or an ASSERT costs no job either.
+  * `(SELECT COUNT(*) FROM t)` in a model or an ASSERT costs no job either:
+  * an uncorrelated scalar subquery whose optimized plan is a one-row,
+  * one-column `LocalRelation` is folded into its `Literal` in the outer
+  * plan, and a `SELECT` of constants only (a `Project` over
+  * `OneRowRelation`, such as `ModelEngine.test`'s batched ASSERT row)
+  * becomes a one-row `LocalRelation`, which is collected on the driver
+  * instead of as a one-task job.
   *
   * The files are the relation's own `listFiles(Nil, Nil)`, the listing
   * its scan would read: empty and hidden files (`_SUCCESS`,
@@ -68,5 +75,19 @@ object FooterCount extends Rule[LogicalPlan] {
       parquetRelation(child).flatMap(rowCount)
         .map(n => LocalRelation(agg.output, Seq(InternalRow.fromSeq(outputs.map(_ => n)))))
         .getOrElse(agg)
+  }.transformAllExpressionsWithPruning(_.containsPattern(SCALAR_SUBQUERY)) {
+    case s: ScalarSubquery if s.outerAttrs.isEmpty && s.joinCond.isEmpty => s.plan match {
+      case l: LocalRelation if l.output.size == 1 && l.data.size == 1 && !l.isStreaming =>
+        Literal(l.data.head.get(0, s.dataType), s.dataType)
+      case _ => s
+    }
+  }.transform {
+    case p @ Project(list, OneRowRelation()) if list.forall(isConstant) =>
+      LocalRelation(p.output, Seq(InternalRow.fromSeq(list.map(_.asInstanceOf[Alias].child.eval()))))
+  }
+
+  private def isConstant(e: NamedExpression): Boolean = e match {
+    case Alias(c, _) => c.foldable
+    case _ => false
   }
 }

@@ -35,7 +35,8 @@ class EmptyInputSpec extends SparkSpec {
       "t2_quality", "t8_vocab", "t15_stratified_sample", "t16_lm_surprisal",
       "t17_domain_mix", "m2_media_stats", "m3_frame_sample",
       "q55_concurrency", "q57_zorder", "q58_sliding_window",
-      "q59_skew_report", "q60_variant", "g1_pagerank", "t18_boilerplate",
+      "q59_skew_report", "q60_variant", "g1_pagerank", "g2_triangles",
+      "g3_shortest_path", "t18_boilerplate",
       // round-5 additions: containment dedup, resize, upsert, bucketed
       // join, count-min, dedup index — all must survive zero-row inputs
       "d9_containment", "m4_resize", "q67_upsert", "q68_bucketed_join",
@@ -108,9 +109,9 @@ class EmptyInputSpec extends SparkSpec {
   test("component labeling handles an empty edge list") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val lp = graft.ops.Dedup.clusterLabels(empty)
-    val star = graft.ops.Dedup.clusterLabelsStar(empty)
-    assert(lp.converged && lp.labels.isEmpty)
+    val res = graft.ops.Dedup.components(empty)
+    val star = graft.ops.Dedup.starContraction(empty, checkpointDir = None)
+    assert(res.converged && res.labels.isEmpty)
     assert(star.converged && star.labels.isEmpty)
   }
 }

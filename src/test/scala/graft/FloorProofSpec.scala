@@ -101,6 +101,15 @@ class FloorProofSpec extends SparkSpec {
       s"(6 AQE jobs); scheduler ran $n")
   }
 
+  test("d6_dedup_clusters floor proof: at most 24 scheduled jobs") {
+    // 34 before the components kernel: the pairs' range-partition sort,
+    // the distinct-endpoint label seed, a second round and each round's
+    // separate convergence job are gone
+    val n = countJobs(graft.ops.Dedup.d6_dedup_clusters(spark, sfDir).count())
+    assert(n <= 24, s"d6's pair build, union-find seed and one propagation round " +
+      s"schedule 24 AQE jobs today; scheduler ran $n")
+  }
+
   test("t24_ccnet_buckets floor proof: at most t16's exchanges + 2") {
     val t16 = exchanges(formatted(graft.ops.TextOps.t16_lm_surprisal(spark, sfDir)))
     val t24 = exchanges(formatted(graft.ops.TextOps.t24_ccnet_buckets(spark, sfDir)))

@@ -143,6 +143,29 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"))
   }
 
+  test("d6: no query it runs range-partitions, while d4 keeps its one output sort") {
+    val d4 = formatted(graft.ops.Dedup.d4_ngram_jaccard(spark, sfDir))
+    assert(d4.linesIterator.count(_.trim.startsWith("Arguments: rangepartitioning(")) == 1,
+      s"d4 orders its pairs with one range-partition exchange:\n$d4")
+    // every query d6 executes (pair build, seed, rounds, the counted
+    // output), read from the session's query listener
+    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val n = countJobs(graft.ops.Dedup.d6_dedup_clusters(spark, sfDir).count())
+      assert(n > 0)
+    } finally spark.listenerManager.unregister(l)
+    assert(plans.size >= 3, s"expected the pair build, seed and rounds, saw ${plans.size} queries")
+    val sorted = plans.toArray.map(_.toString).filter(_.toLowerCase.contains("rangepartitioning"))
+    assert(sorted.isEmpty, s"d6 range-partitions:\n${sorted.mkString("\n")}")
+  }
+
   test("t12: df table and corpus size broadcast onto the term table") {
     val plan = formatted(graft.ops.PipelineOps.t12_tfidf(spark, sfDir))
     assert(nodeCount(plan, "BroadcastHashJoin") >= 1, "df join must broadcast")

@@ -31,14 +31,32 @@ class PropertySpec extends SparkSpec {
         b <- Gen.choose(0L, n.toLong - 1)
       } yield (a, b))
     } yield edges.filter { case (a, b) => a != b }
+    // driver-side reference: union-find, every node to its component's min
+    def reference(edges: List[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      parent.keys.map(n => n -> find(n)).toMap
+    }
+    def toMap(r: graft.ops.Dedup.ClusterResult) = r.labels.collect()
+      .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("label")).toMap
     checkProp(forAll(genEdges) { edges =>
       edges.isEmpty || {
-        val df = edges.toDF("id_a", "id_b")
-        val lp = graft.ops.Dedup.clusterLabels(df, maxRounds = 30)
-        val star = graft.ops.Dedup.clusterLabelsStar(df)
-        def toMap(r: graft.ops.Dedup.ClusterResult) = r.labels.collect()
-          .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("label")).toMap
-        lp.converged && star.converged && toMap(lp) == toMap(star)
+        val expected = reference(edges)
+        // one partition (the seed labels whole components) and one edge
+        // per partition (label propagation and, past its cap, the star
+        // step do all the work)
+        val layouts = Seq(1, edges.size).map(n =>
+          spark.sparkContext.parallelize(edges, n).toDF("id_a", "id_b"))
+        val lp = layouts.map(df => graft.ops.Dedup.components(df, maxRounds = 30))
+        val star = graft.ops.Dedup.starContraction(layouts.last, checkpointDir = None)
+        (lp :+ star).forall(r => r.converged && toMap(r) == expected)
       }
     }, minTests = 12)
   }

@@ -136,12 +136,12 @@ class ModelEngineSpec extends SparkSpec {
       val rows = spark.table(m.name).rdd.count()
       AssertTest(s"(SELECT COUNT(*) FROM ${m.name}) = $rows", s"${m.name} has $rows rows")
     }
-    // the batch's one-row SELECT is the only job: two per ASSERT before
-    // FooterCount answered the counts from the footers
+    // two jobs per ASSERT before FooterCount answered the counts from the
+    // footers; the folded one-row SELECT is then collected on the driver
     var results = Seq.empty[(String, Boolean)]
     val jobs = countJobs { results = engine.test(asserts) }
     assert(results.map(_._2) == Seq(true, true), results)
-    assert(jobs <= 1, s"engine.test scheduled $jobs jobs")
+    assert(jobs == 0, s"engine.test scheduled $jobs jobs")
   }
 
   test("docs emits mermaid DAG + schema tables") {

@@ -109,56 +109,103 @@ class DedupSpec extends SparkSpec {
     assert(unguarded > 1000)
   }
 
-  test("d6/clusterLabels: a >12-hop chain reports non-convergence, not wrong labels") {
+  /** The path graph 0-1-…-n with one edge per partition, so no partition's
+    * union-find seed joins more than one edge and propagation has to walk
+    * the whole chain.
+    */
+  private def spreadChain(n: Long): DataFrame = {
     import spark.implicits._
+    val edges = (0L until n).map(i => (i, i + 1))
+    spark.sparkContext.parallelize(edges, edges.size).toDF("id_a", "id_b")
+  }
+
+  test("d6/components: a >12-hop chain reports non-convergence, not wrong labels") {
     // path graph 0-1-2-…-20: min-label needs 20 rounds to reach the tail
-    val chain = (0L until 20L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val capped = Dedup.clusterLabels(chain, maxRounds = 6)
+    val chain = spreadChain(20L)
+    val capped = Dedup.propagate(chain, maxRounds = 6, checkpointDir = None)
     assert(!capped.converged && capped.rounds == 6)
-    val full = Dedup.clusterLabels(chain, maxRounds = 25)
+    val full = Dedup.propagate(chain, maxRounds = 25, checkpointDir = None)
     assert(full.converged && full.rounds <= 25)
     assert(full.labels.filter(col("label") =!= 0L).count() == 0,
       "fully propagated chain collapses to the minimum label")
   }
 
-  test("d6/clusterLabelsStar: logarithmic rounds collapse a chain far past the label-prop cap") {
+  test("d6/components: the union-find seed labels a chain held in one partition before round 1") {
+    val chain = spreadChain(20L).coalesce(1)
+    val res = Dedup.components(chain, maxRounds = 6)
+    assert(res.converged && res.rounds == 1, s"rounds = ${res.rounds}")
+    assert(res.labels.filter(col("label") =!= 0L).count() == 0)
+    assert(res.labels.count() == 21)
+  }
+
+  test("d6/components star step: logarithmic rounds collapse a chain far past the label-prop cap") {
     import spark.implicits._
     // path graph 0-1-…-60: label propagation needs 60 rounds (diameter);
     // star contraction is logarithmic in component SIZE, not diameter
-    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val star = Dedup.clusterLabelsStar(chain, maxRounds = 20)
+    val chain = spreadChain(60L)
+    val star = Dedup.starContraction(chain, checkpointDir = None, maxRounds = 20)
     assert(star.converged, s"star contraction should converge, took ${star.rounds} rounds")
     assert(star.rounds <= 12, s"rounds should be logarithmic, got ${star.rounds}")
     assert(star.labels.filter(col("label") =!= 0L).count() == 0,
       "every chain node labels to the component minimum")
     assert(star.labels.count() == 61)
-    // multiple components + a cycle: same contract as clusterLabels
+    // multiple components + a cycle: same labels as min-label propagation
     val mixed = Seq((5L, 6L), (6L, 7L), (7L, 5L), (10L, 11L), (3L, 9L)).toDF("id_a", "id_b")
-    val res = Dedup.clusterLabelsStar(mixed)
+    val res = Dedup.starContraction(mixed, checkpointDir = None)
     assert(res.converged)
     val labels = res.labels.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
     assert(labels == Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L, 3L -> 3L, 9L -> 3L))
   }
 
-  test("d6/clusterLabelsAuto escalates a wide component from label-prop to star contraction") {
-    import spark.implicits._
-    val chain = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+  test("d6/components escalates a wide component from label-prop to star contraction") {
+    val chain = spreadChain(60L)
     // propagation cap of 6 cannot close a 60-hop chain → star takes over
-    val res = Dedup.clusterLabelsAuto(chain, propRounds = 6)
+    val res = Dedup.components(chain, maxRounds = 6)
     assert(res.converged)
     assert(res.labels.filter(col("label") =!= 0L).count() == 0)
   }
 
-  test("clusterLabels with a reliable checkpoint dir propagates identically") {
+  test("components with a reliable checkpoint dir propagates identically") {
     import spark.implicits._
     val pairs = Seq((5L, 6L), (6L, 7L), (10L, 11L)).toDF("id_a", "id_b")
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
-    val res = Dedup.clusterLabels(pairs, maxRounds = 12, checkpointDir = Some(dir))
+    val res = Dedup.components(pairs, maxRounds = 12, checkpointDir = Some(dir))
     assert(res.converged)
     val labels = res.labels.collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
     assert(labels == Map(5L -> 5L, 6L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("shingles: the native loop equals the lambda form on edge strings and the testdata corpus") {
+    import spark.implicits._
+    val lambda = expr(
+      """array_distinct(CASE WHEN size(toks) >= 2 THEN
+        |  transform(sequence(0, size(toks) - 2), i -> concat_ws(' ', toks[i], toks[i+1]))
+        |ELSE array(concat_ws(' ', toks)) END)""".stripMargin)
+    def both(texts: DataFrame): DataFrame =
+      texts.withColumn("toks", expr(TextOps.TOKENS))
+        .select(col("doc_id"), col("text"), lambda.as("lambda"),
+          graft.functions.HashExpressions.shingles(col("text")).as("native"))
+    val edge = Seq[String](null, "", " ", "a", " a ", "a  b", "a b a b",
+      "  x y  x y z ", "é ü é ü").zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val docs = graft.Tables(spark, sfDir).documents.select("doc_id", "text")
+    Seq(edge, docs).foreach { texts =>
+      val rows = both(texts)
+      // both evaluation paths: generated code and the interpreted eval
+      val diff = rows.filter(not(col("lambda") <=> col("native"))).count()
+      assert(diff == 0, s"$diff documents shingle differently")
+      rows.collect().foreach { r =>
+        val expected = r.getSeq[String](2)
+        val eval = graft.functions.GraftShingles.bigrams(
+          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1)))
+        assert(eval.toSeq[org.apache.spark.unsafe.types.UTF8String](
+          org.apache.spark.sql.types.StringType).map(_.toString) == expected, r)
+      }
+    }
+    assert(both(edge).filter(col("doc_id") === 0L).head().getSeq[String](3) == Seq(""),
+      "null text shingles to one empty string, as the lambda form does")
   }
 
   // ------------------------------------------------------ bucketPairs

@@ -127,6 +127,25 @@ class FooterCountSpec extends SparkSpec {
     finally cached.unpersist()
   }
 
+  test("scalar COUNT(*) subqueries fold into literals and their one-row SELECT runs no job") {
+    val df = Sources.parquet(spark, multiFile)
+    df.createOrReplaceTempView("footer_count_s")
+    val n = df.rdd.count()
+    val q = s"SELECT (SELECT COUNT(*) FROM footer_count_s) = $n AS t0, " +
+      "(SELECT COUNT(*) FROM footer_count_s) AS t1"
+    val plan = spark.sql(q).queryExecution.optimizedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], plan)
+    var row: org.apache.spark.sql.Row = null
+    val jobs = countJobs { row = spark.sql(q).collect().head }
+    assert(row.getBoolean(0) && row.getLong(1) == n, row)
+    assert(jobs == 0, s"the one-row SELECT ran $jobs jobs")
+    // a subquery that still scans keeps its value
+    assertScanned(
+      spark.sql("SELECT (SELECT COUNT(*) FROM footer_count_s WHERE o_totalprice > 100000) AS c")
+        .collect().head.getLong(0),
+      df.where("o_totalprice > 100000").rdd.count(), "filtered scalar subquery")
+  }
+
   test("CSV and JSON sources and listings above the threshold still scan") {
     val orders = Tables(spark, sfDir).orders
     val root = tmpDir("fc_text_")
